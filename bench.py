@@ -197,11 +197,7 @@ def load_prior_timings(here: str, known: set, canary: str,
             with open(local) as f:
                 rec = _json.load(f)
             cand = rec.get("queries") or {}
-            cpus_ok = (
-                cpus is None
-                or rec.get("cpus") is None
-                or str(rec.get("cpus")) == str(cpus)
-            )
+            cpus_ok = cpus is None or str(rec.get("cpus")) == str(cpus)
             if (str(rec.get("sf")) == str(sf) and cand.get(canary, 0) > 0
                     and cpus_ok):
                 return cand, "BENCH_LOCAL_LAST.json"

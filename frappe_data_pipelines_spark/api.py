@@ -183,7 +183,11 @@ class PipelineEngine:
         """J6 orchestrator: chunk → embed every eligible job in one plan
         (process_embedding.py:84-281). When ``settings`` is present, its
         strategy + size/overlap (factory precedence, chunking_service.py:
-        484-522) become the defaults; explicit kwargs still win."""
+        484-522) become the defaults; explicit kwargs still win.
+
+        Both outputs come from ONE chunk+embed pass: persist the chunk rows
+        before using both, or every action on the job rows embeds every
+        chunk again (see ``run_pipeline_batch``)."""
         from frappe_data_pipelines_spark.operators.pipeline import run_pipeline_batch
 
         if self.settings is not None:

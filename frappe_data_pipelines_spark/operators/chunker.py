@@ -12,8 +12,12 @@ Three strategies, re-implemented from scratch:
   splitting of oversized sections (reference: services/chunking_service.py:166-481).
 * ``chunk_documents`` — the distributed operator: one Arrow-batched
   ``mapInPandas`` pass over the documents table. Chunking is per-document and
-  embarrassingly parallel, so there is NO shuffle — each input partition chunk
+  embarrassingly parallel, so there is NO shuffle — each input partition chunks
   its own documents; at 100 TB this scales linearly with executors.
+* ``chunk_embed_documents`` — the ingest form: the same pass also embeds each
+  flush of chunk rows, so chunk → embed is ONE Python pass per plan and every
+  chunk row crosses the JVM↔Python boundary once. Both operators run the one
+  per-batch loop, ``_chunk_batches``.
 
 Python is the right tool here (genuinely procedural, stateful-per-document
 semantics that relational ops can't express); Arrow batching keeps the
@@ -29,6 +33,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators.embed import _resolve_provider
 
 DEFAULT_SEPARATORS = ["\n\n", "\n", ". ", " ", ""]
 DEFAULT_CHUNK_SIZE = 1000
@@ -339,6 +345,70 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("section_path", T.StringType()),
     ]
 )
+CHUNK_COLUMNS = tuple(f.name for f in CHUNK_SCHEMA.fields)
+ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _chunk_batches(
+    batches: Iterator,
+    strategy: str = "recursive",
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
+    max_rows: int | None = None,
+) -> Iterator[dict[str, list]]:
+    """The per-batch chunk loop behind every chunking pass: pandas frames of
+    (doc_id, text) in, column dicts of chunk rows (``CHUNK_COLUMNS``) out.
+
+    ``max_rows=None`` yields one dict per input batch. ``max_rows=n`` instead
+    yields every time n chunk rows have accumulated — mid-document if need
+    be, so a long document never builds an unbounded batch — plus the
+    remainder once the input is exhausted.
+    """
+    sem = SemanticChunker(target_size=chunk_size, overlap=chunk_overlap)
+
+    def empty() -> dict[str, list]:
+        return {k: [] for k in CHUNK_COLUMNS}
+
+    rows = empty()
+    for pdf in batches:
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            if text is None:
+                continue
+            if strategy == "semantic":
+                secs = sem.chunk(text)
+                chunks = [(s.text, s.path) for s in secs]
+            elif strategy == "hybrid":
+                # DoclingChunker analogue (chunking_service.py:23-124) in
+                # HybridChunker's own order: per-paragraph peer items
+                # (headings = section path) → budget split of oversize
+                # items → merge_peers (same-path consecutive items merged
+                # while they fit; '\n' delimiter; never across sections)
+                chunks = [(s.text, s.path) for s in sem.chunk_hybrid(text)]
+            else:
+                chunks = [
+                    (c, "Document")
+                    for c in recursive_character_split(text, chunk_size, chunk_overlap)
+                ]
+            total = len(chunks)
+            for i, (ctext, path) in enumerate(chunks):
+                rows["doc_id"].append(doc_id)
+                rows["chunk_index"].append(i)
+                rows["chunk_text"].append(ctext)
+                rows["character_count"].append(len(ctext))
+                rows["total_chunks"].append(total)
+                rows["section_path"].append(path)
+                if max_rows is not None and len(rows["doc_id"]) >= max_rows:
+                    yield rows
+                    rows = empty()
+        if max_rows is None:
+            yield rows
+            rows = empty()
+    if max_rows is not None and rows["doc_id"]:
+        yield rows
+
+
+def _chunk_input(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text"))
 
 
 def chunk_documents(
@@ -356,45 +426,53 @@ def chunk_documents(
     inside the per-document loop (no window function needed — the per-doc
     enumeration IS the reference's ``enumerate(chunks)``, SURVEY E1).
     """
-    narrow = docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text"))
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        sem = SemanticChunker(target_size=chunk_size, overlap=chunk_overlap)
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", "chunk_index", "chunk_text",
-                                      "character_count", "total_chunks", "section_path")}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None:
-                    continue
-                if strategy == "semantic":
-                    secs = sem.chunk(text)
-                    chunks = [(s.text, s.path) for s in secs]
-                elif strategy == "hybrid":
-                    # DoclingChunker analogue (chunking_service.py:23-124) in
-                    # HybridChunker's own order: per-paragraph peer items
-                    # (headings = section path) → budget split of oversize
-                    # items → merge_peers (same-path consecutive items merged
-                    # while they fit; '\n' delimiter; never across sections)
-                    chunks = [(s.text, s.path) for s in sem.chunk_hybrid(text)]
-                else:
-                    chunks = [
-                        (c, "Document")
-                        for c in recursive_character_split(text, chunk_size, chunk_overlap)
-                    ]
-                total = len(chunks)
-                for i, (ctext, path) in enumerate(chunks):
-                    rows["doc_id"].append(doc_id)
-                    rows["chunk_index"].append(i)
-                    rows["chunk_text"].append(ctext)
-                    rows["character_count"].append(len(ctext))
-                    rows["total_chunks"].append(total)
-                    rows["section_path"].append(path)
+        for rows in _chunk_batches(batches, strategy, chunk_size, chunk_overlap):
             yield pd.DataFrame(rows)
 
-    return narrow.mapInPandas(run, schema=CHUNK_SCHEMA)
+    return _chunk_input(docs, id_col, text_col).mapInPandas(run, schema=CHUNK_SCHEMA)
+
+
+def chunk_embed_documents(
+    docs: DataFrame,
+    strategy: str = "recursive",
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
+    provider=None,
+) -> DataFrame:
+    """``chunk_documents`` then ``embed_documents(text_col="chunk_text")`` as
+    ONE ``mapInPandas`` pass over ``(doc_id, text)``: the chunk columns
+    followed by ``embedding array<float>``, row for row what the
+    two-operator plan gives, but every chunk row crosses the JVM↔Python
+    boundary once instead of twice (SURVEY J6: the reference embeds each file's chunks right after
+    chunking them, process_embedding.py:84-281).
+
+    Memory stays bounded as in the two-operator plan, where Arrow batching
+    capped each embed call at ``maxRecordsPerBatch`` chunk rows: that conf
+    is read here, on the driver, and the kernel calls ``provider.embed``
+    every time that many chunk rows have accumulated. ``provider`` follows
+    ``embed_documents``: an instance (pickled) or a zero-arg factory
+    (resolved once per executor process).
+    """
+    max_rows = int(docs.sparkSession.conf.get(ARROW_BATCH_CONF, "10000"))
+    max_rows = max_rows if max_rows > 0 else None  # <= 0: Spark's "no limit"
+    schema = T.StructType(
+        CHUNK_SCHEMA.fields + [T.StructField("embedding", T.ArrayType(T.FloatType()))]
+    )
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        prov = _resolve_provider(provider)
+        for rows in _chunk_batches(batches, strategy, chunk_size, chunk_overlap, max_rows):
+            texts = rows["chunk_text"]
+            rows["embedding"] = prov.embed(texts) if texts else []
+            yield pd.DataFrame(rows)
+
+    return _chunk_input(docs, "doc_id", "text").mapInPandas(run, schema=schema)
 
 
 def register_chunk_udtf(spark, name: str = "chunk_split") -> None:

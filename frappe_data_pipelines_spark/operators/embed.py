@@ -3,9 +3,16 @@
 The reference exposes a pluggable ``EmbeddingProvider.embed(texts) ->
 List[List[float]]`` with Ollama / OpenRouter / auto-detected-dimension
 implementations (reference: services/embedding_service.py:72-313). Here the
-provider contract is the same, but execution is an Arrow-batched pandas UDF:
-each executor embeds its own partition's texts in vectorized batches — the
-distributed analogue of the reference's 50-per-batch HTTP loop.
+provider contract is the same; each executor embeds its own partition's texts
+in Arrow-sized batches — the distributed analogue of the reference's
+50-per-batch HTTP loop. Two operators call a provider:
+
+* ``chunker.chunk_embed_documents`` — the ingest path: chunking and embedding
+  in one ``mapInPandas`` pass, so chunk rows cross into Python once;
+* ``embed_documents`` — a pandas UDF appending the embedding of any string
+  column (e.g. contextually enriched text, not the raw chunk).
+
+Both resolve the provider through ``_resolve_provider``.
 
 ``HashingEmbedder`` is the deterministic default (feature-hashing into a
 fixed dim, L2-normalized): no network, reproducible across runs/machines, so

@@ -21,7 +21,9 @@ Batch entry points mirror the reference's whitelisted/scheduled tasks:
                              (drive_file_handler.py:98-149)
   * ``run_pipeline_batch`` — J6: the full chunk→embed→store stage DAG for a
                              batch of Queued jobs, returning new chunk rows
-                             and the jobs' terminal states
+                             and the jobs' terminal states. Chunk → embed is
+                             ONE Arrow Python pass (``chunk_embed_documents``)
+                             and the job rows need no shuffle
 
 The streaming twin (micro-batch foreachBatch with per-stage status commits)
 lives in ``streaming/ingest.py``. All functions are pure DataFrame → DataFrame
@@ -33,8 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from frappe_data_pipelines_spark.operators.chunker import chunk_documents
-from frappe_data_pipelines_spark.operators.embed import embed_documents
+from frappe_data_pipelines_spark.operators.chunker import chunk_embed_documents
 
 ACTIVE_STATUSES = ["Queued", "Extracting Text", "Chunking", "Enriching Context",
                    "Embedding", "Storing Vectors", "Completed"]
@@ -117,29 +118,41 @@ def run_pipeline_batch(
     job through chunk → embed; returns (chunk_rows, terminal_job_states).
 
     The whole batch is ONE DataFrame plan: eligible jobs broadcast-semi-join
-    the file table, chunking+embedding run shuffle-free per partition, and
-    job completion states derive from the chunk output with a single groupBy
-    — the distributed restatement of the reference's per-job worker loop
-    (process_embedding.py:84-239)."""
+    the file table, and chunking+embedding run as one shuffle-free Python
+    pass per partition — the distributed restatement of the reference's
+    per-job worker loop (process_embedding.py:84-239). Job completion states
+    come from each doc's ``chunk_index == 0`` row, whose ``total_chunks`` is
+    the doc's chunk count (the chunker emits a doc's chunks together), so
+    they need no groupBy and no shuffle. Docs yielding no chunks (null or
+    blank text) get no terminal row.
+
+    Persist the chunk rows before acting on both outputs: the job rows read
+    that same pass, and Spark cannot prune the embedding out of an opaque
+    Python pass, so an uncached action on the job rows re-runs chunking AND
+    the provider's ``embed`` on every chunk (remote calls, for an HTTP
+    provider)::
+
+        chunks, done = run_pipeline_batch(files, jobs)
+        chunks.persist()        # done's plan then reads the cache too
+        chunks.write.parquet(chunk_path)
+        done.write.parquet(job_path)
+        chunks.unpersist()
+    """
     eligible = jobs.filter(F.col("status").isin("Queued", "Failed"))  # B8 guard
     todo = files.join(
         eligible.select("source_doc_id"),
         files.doc_id == F.col("source_doc_id"),
         "left_semi",
     )
-    chunks = chunk_documents(
-        todo, strategy=strategy, chunk_size=chunk_size, chunk_overlap=chunk_overlap
+    embedded = chunk_embed_documents(
+        todo, strategy=strategy, chunk_size=chunk_size, chunk_overlap=chunk_overlap,
+        provider=embed_provider,
     )
-    embedded = embed_documents(chunks, text_col="chunk_text", provider=embed_provider)
-    done = (
-        embedded.groupBy("doc_id")
-        .agg(F.count("*").alias("n_chunks"))
-        .select(
-            F.col("doc_id").alias("source_doc_id"),
-            F.lit("Completed").alias("status"),
-            F.col("n_chunks"),
-            F.current_timestamp().alias("completed_at"),
-        )
+    done = embedded.filter(F.col("chunk_index") == 0).select(
+        F.col("doc_id").alias("source_doc_id"),
+        F.lit("Completed").alias("status"),
+        F.col("total_chunks").cast("long").alias("n_chunks"),
+        F.current_timestamp().alias("completed_at"),
     )
     return embedded, done
 

@@ -15,14 +15,13 @@ from frappe_data_pipelines_spark.functions.text import (
     token_count_expr,
     tokens_expr,
 )
-from frappe_data_pipelines_spark.operators.chunker import chunk_documents
+from frappe_data_pipelines_spark.operators.chunker import chunk_documents, chunk_embed_documents
 from frappe_data_pipelines_spark.operators.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash64,
 )
-from frappe_data_pipelines_spark.operators.embed import embed_documents
 from frappe_data_pipelines_spark.operators.search import (
     bm25_scores,
     knn_topk,
@@ -477,8 +476,7 @@ def flagship_chunk_embed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frappe_data_pipelines_spark.operators.embed import HashingEmbedder
 
     docs = load_table(spark, sf_dir, "documents")
-    chunks = chunk_documents(docs, strategy="recursive", chunk_size=200, chunk_overlap=40)
-    embedded = embed_documents(chunks, text_col="chunk_text", out_col="embedding")
+    embedded = chunk_embed_documents(docs, strategy="recursive", chunk_size=200, chunk_overlap=40)
     qv = HashingEmbedder().embed([" ".join(QUERY_TERMS)])[0]
     return knn_topk(
         embedded, qv, k=10, vec_col="embedding", id_col="doc_id"

@@ -36,8 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from frappe_data_pipelines_spark.operators.chunker import chunk_documents
-from frappe_data_pipelines_spark.operators.embed import embed_documents
+from frappe_data_pipelines_spark.operators.chunker import chunk_embed_documents
 
 DOC_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
@@ -426,12 +425,10 @@ def start_ingest_stream(
             ),
             stream.schema,
         )
-        chunks = chunk_documents(
+        embedded = chunk_embed_documents(
             good_df, strategy="recursive",
             chunk_size=chunk_size, chunk_overlap=chunk_overlap,
-        )
-        embedded = embed_documents(
-            chunks, text_col="chunk_text", provider=embed_provider
+            provider=embed_provider,
         ).withColumn("batch_id", F.lit(batch_id))
         parts = _chunk_sink_parts(spark_sess, embedded, batch_id)
         mark("chunk sink (exactly-once)" if exactly_once else "chunk plan built")
@@ -670,12 +667,10 @@ def start_ingest_stream(
             .otherwise(F.lit("empty or null text"))
             .alias("error_message"),
         )
-        chunks = chunk_documents(
+        embedded = chunk_embed_documents(
             batch_df.filter(~bad).drop("__bl_hits", "__q_score"),
             strategy="recursive", chunk_size=chunk_size, chunk_overlap=chunk_overlap,
-        )
-        embedded = embed_documents(
-            chunks, text_col="chunk_text", provider=embed_provider
+            provider=embed_provider,
         ).withColumn("batch_id", F.lit(batch_id))
         # I5 exactly-once (inside _chunk_sink_parts): the chunk sink is a
         # MERGE keyed on (doc_id, chunk_index) — re-delivered batches

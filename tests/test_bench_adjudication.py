@@ -61,14 +61,15 @@ def test_prior_walks_back_past_truncated_artifacts(tmp_path):
     rows survive — the prior loader must walk BACK to the newest artifact
     that actually yields per-query timings including the canary (r8,
     whose q6 is the 0.199s clean reference). Run against a copy holding
-    ONLY the BENCH_r*.json artifacts so a BENCH_LOCAL_LAST.json in the
-    repo root doesn't shadow the walk-back path under test."""
+    ONLY the r02-r09 BENCH_r*.json artifacts, so neither a
+    BENCH_LOCAL_LAST.json in the repo root nor a later round's complete
+    artifact shadows the walk-back path under test."""
     import glob
     import shutil
 
     from bench import HEADLINE, load_prior_timings
 
-    for p in glob.glob("BENCH_r*.json"):
+    for p in glob.glob("BENCH_r0*.json"):
         shutil.copy(p, tmp_path)
     prior, src = load_prior_timings(
         str(tmp_path), set(HEADLINE), "tpch_q6_forecast_revenue"
@@ -89,7 +90,7 @@ def test_prior_prefers_full_local_artifact_when_sf_matches(tmp_path):
 
     from bench import load_prior_timings
 
-    for p in glob.glob("BENCH_r*.json"):
+    for p in glob.glob("BENCH_r0*.json"):
         shutil.copy(p, tmp_path)
     local = {"sf": 0.1, "queries": {"tpch_q6_forecast_revenue": 0.25, "x": 1.0}}
     (tmp_path / "BENCH_LOCAL_LAST.json").write_text(json.dumps(local))
@@ -184,7 +185,7 @@ def test_prior_skips_core_count_mismatched_local_record(tmp_path):
 
     from bench import load_prior_timings
 
-    for p in glob.glob("BENCH_r*.json"):
+    for p in glob.glob("BENCH_r0*.json"):
         shutil.copy(p, tmp_path)
     rec = {"sf": 0.1, "cpus": "8",
            "queries": {"tpch_q6_forecast_revenue": 0.25, "x": 1.0}}
@@ -200,10 +201,15 @@ def test_prior_skips_core_count_mismatched_local_record(tmp_path):
         str(tmp_path), known, "tpch_q6_forecast_revenue", sf="0.1", cpus="*"
     )
     assert src2 == "BENCH_r08.json"
-    # legacy record without a cpus stamp stays usable (continuity)
+    # a record without a cpus stamp cannot prove its core count -> walk-back
     rec.pop("cpus")
     (tmp_path / "BENCH_LOCAL_LAST.json").write_text(json.dumps(rec))
     prior3, src3 = load_prior_timings(
         str(tmp_path), known, "tpch_q6_forecast_revenue", sf="0.1", cpus="32"
     )
-    assert src3 == "BENCH_LOCAL_LAST.json"
+    assert src3 == "BENCH_r08.json"
+    # no requested count: the unstamped record is still used
+    prior4, src4 = load_prior_timings(
+        str(tmp_path), known, "tpch_q6_forecast_revenue", sf="0.1"
+    )
+    assert src4 == "BENCH_LOCAL_LAST.json"

@@ -2,8 +2,17 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import functions as F
 
+from frappe_data_pipelines_spark.operators.chunker import (
+    ARROW_BATCH_CONF,
+    chunk_documents,
+    chunk_embed_documents,
+)
+from frappe_data_pipelines_spark.operators.embed import embed_documents
 from frappe_data_pipelines_spark.operators.pipeline import (
     backfill_jobs,
     cascade_delete,
@@ -78,6 +87,114 @@ def test_run_pipeline_batch_full_dag(spark):
     d = {r["source_doc_id"]: r for r in done.collect()}
     assert sorted(d) == [1, 2, 3]
     assert all(r["status"] == "Completed" and r["n_chunks"] > 0 for r in d.values())
+
+
+# -- chunk -> embed as one Python pass ---------------------------------------
+
+INGEST_BATCH = 5  # maxRecordsPerBatch for the fused-pass tests
+
+
+def _words(k: int, n: int) -> str:
+    return " ".join(f"w{k}x{j}" for j in range(n))
+
+
+@pytest.fixture(scope="module")
+def ingest_docs(spark):
+    """Two partitions of 13 docs each — several Arrow batches apiece at
+    INGEST_BATCH — mixing None, empty and blank text, headed sections (for
+    semantic/hybrid), plain paragraphs and one long doc whose chunks span
+    several flushes."""
+    rows = []
+    for i in range(25):
+        if i % 8 == 3:
+            text = None
+        elif i % 8 == 5:
+            text = "   \n\n  "
+        elif i % 8 == 6:
+            text = ""
+        elif i % 4 == 0:
+            text = (f"# Title {i}\n\n{_words(i, 30)}\n\n## Part\n\n{_words(i + 100, 45)}"
+                    f"\n\nNOTES SECTION\n{_words(i + 200, 8)}")
+        else:
+            text = "\n\n".join(_words(10 * i + k, 6 + 5 * k) for k in range(1 + i % 5))
+        rows.append((i, text))
+    rows.append((99, "\n".join(_words(99 + k, 25) for k in range(14))))
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), "doc_id long, text string"
+    )
+
+
+@contextmanager
+def _arrow_batch(spark, n: int):
+    old = spark.conf.get(ARROW_BATCH_CONF)
+    spark.conf.set(ARROW_BATCH_CONF, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(ARROW_BATCH_CONF, old)
+
+
+def _final_plan(df) -> str:
+    """The executed plan after an action (AQE's final plan only)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("strategy", ["recursive", "semantic", "hybrid"])
+def test_fused_chunk_embed_matches_two_operators(spark, ingest_docs, strategy):
+    """chunk_embed_documents == chunk_documents -> embed_documents row for
+    row: same columns in the same order, same rows in the same order."""
+    kw = dict(strategy=strategy, chunk_size=120, chunk_overlap=20)
+    with _arrow_batch(spark, INGEST_BATCH):
+        fused = chunk_embed_documents(ingest_docs, **kw)
+        two = embed_documents(chunk_documents(ingest_docs, **kw), text_col="chunk_text")
+        assert fused.schema == two.schema
+        got, want = fused.collect(), two.collect()
+    assert len(want) > 4 * INGEST_BATCH
+    assert got == want
+
+
+def test_fused_pass_caps_every_embed_call(spark, ingest_docs):
+    """A provider recording each call's size (as the embedding itself) never
+    sees more than maxRecordsPerBatch texts, also while a long doc's chunks
+    straddle flushes; every chunk is embedded exactly once."""
+
+    class CallSizeEmbedder:
+        def embed(self, texts):
+            return [[float(len(texts))] for _ in texts]
+
+    with _arrow_batch(spark, INGEST_BATCH):
+        out = chunk_embed_documents(
+            ingest_docs, chunk_size=120, chunk_overlap=20, provider=CallSizeEmbedder()
+        ).collect()
+    sizes = [r["embedding"][0] for r in out]
+    assert len(out) == len(chunk_documents(ingest_docs, chunk_size=120, chunk_overlap=20).collect())
+    assert max(sizes) == INGEST_BATCH
+    assert sum(1 for r in out if r["doc_id"] == 99) > INGEST_BATCH
+
+
+def test_run_pipeline_batch_is_one_python_pass(spark, ingest_docs):
+    """Chunk and embed run as ONE MapInPandas (no ArrowEvalPython), and the
+    job rows come from the chunk_index == 0 rows without a shuffle, equal to
+    a per-doc recount of the chunk output."""
+    # the semi-join broadcasts the job list, so any hash exchange left in
+    # the plan would be the job rows' own
+    jobs = F.broadcast(ingest_docs.select(
+        F.col("doc_id").alias("source_doc_id"), F.lit("Queued").alias("status")
+    ))
+    chunks, done = run_pipeline_batch(ingest_docs, jobs, chunk_size=120, chunk_overlap=20)
+    recount = {
+        r["doc_id"]: r["n"] for r in chunks.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
+    }
+    rows = done.collect()
+    assert {r["source_doc_id"]: r["n_chunks"] for r in rows} == recount
+    assert done.columns == ["source_doc_id", "status", "n_chunks", "completed_at"]
+    assert dict(done.dtypes)["n_chunks"] == "bigint"
+    chunk_plan, done_plan = _final_plan(chunks), _final_plan(done)
+    for plan in (chunk_plan, done_plan):
+        assert plan.count("MapInPandas") == 1, plan
+        assert "ArrowEvalPython" not in plan, plan
+    assert "Exchange hashpartitioning" not in done_plan, done_plan
 
 
 def test_pipeline_idempotent_rerun(spark):

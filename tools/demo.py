@@ -15,9 +15,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from frappe_data_pipelines_spark.api import PipelineEngine, SearchService, search_documents
-    from frappe_data_pipelines_spark.operators.chunker import chunk_documents
+    from frappe_data_pipelines_spark.operators.chunker import chunk_embed_documents
     from frappe_data_pipelines_spark.operators.dedup import minhash_lsh_pairs
-    from frappe_data_pipelines_spark.operators.embed import embed_documents
     from frappe_data_pipelines_spark.session import get_spark
     from frappe_data_pipelines_spark.sources.tables import load_table
 
@@ -26,9 +25,10 @@ def main() -> None:
     docs = load_table(spark, sf, "documents")
     emb = load_table(spark, sf, "embeddings")
 
-    print("== chunk -> embed (flagship ingestion path)")
-    chunks = chunk_documents(docs.limit(50), strategy="semantic", chunk_size=300, chunk_overlap=60)
-    vectors = embed_documents(chunks, text_col="chunk_text")
+    print("== chunk -> embed in one Python pass (flagship ingestion path)")
+    vectors = chunk_embed_documents(
+        docs.limit(50), strategy="semantic", chunk_size=300, chunk_overlap=60
+    )
     vectors.select("doc_id", "chunk_index", "character_count").show(5)
 
     print("== dense / hybrid / similar search")
