@@ -16,12 +16,8 @@ the tail. The full object (all 73 rows, baseline comparison, adjudication)
 is persisted to BENCH_LOCAL_LAST.json (sf0.1 runs only) as the next round's
 adjudication prior.
 
-Each query is executed to completion via a ``noop``-format write: the full
-physical plan runs on the executors (scans, shuffles, UDFs, sorts), but rows
-are not materialized into Python driver objects — that conversion cost is a
-property of the client, not the engine, and at 600k-row result sets it would
-dominate the measurement. (The driver's correctness gate still collect()s
-every query separately.)
+Queries are timed through ``tools/measure.py`` (noop-format writes: the
+whole plan runs, no rows are collected to the driver).
 """
 
 from __future__ import annotations
@@ -32,6 +28,14 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools.measure import (  # noqa: E402
+    CANARY,
+    CLEAN_Q6_REF,
+    bracket_verdict,
+    moved,
+    open_timer,
+)
 
 HEADLINE = [
     "flagship_chunk_embed_search",
@@ -232,148 +236,72 @@ def final_contract_line(timings: dict, total: float, sf) -> str:
     contract — metric/value/unit/sf/queries — with the headline timings at
     2 decimals. Sized to survive the driver's ~2000-char stdout tail whole
     (measured ~1.96k chars at 65 queries); if the map ever outgrows the
-    budget, precision degrades to 1 decimal before anything is dropped."""
-    final = {
-        "metric": "headline_suite_sec",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "queries": {n: round(t, 2) for n, t in timings.items()},
-    }
-    line = json.dumps(final, separators=(",", ":"))
-    if len(line) > 1992:  # tail is 2000 chars; leave room for the newline
-        final["queries"] = {n: round(t, 1) for n, t in timings.items()}
+    budget, precision degrades to 1 decimal, then to whole seconds (error
+    rows keep -1.0). A line that still does not fit raises ValueError
+    instead of being cut silently by the tail."""
+    final = {"metric": "headline_suite_sec", "value": total, "unit": "sec",
+             "sf": sf}
+    for digits in (2, 1, None):
+        final["queries"] = {
+            n: t if t < 0 else round(t, digits) for n, t in timings.items()
+        }
         line = json.dumps(final, separators=(",", ":"))
-    return line
+        if len(line) <= 1992:  # tail is 2000 chars; leave room for the newline
+            return line
+    raise ValueError(
+        f"final contract line is {len(line)} chars even at whole seconds; "
+        "the driver keeps only the last 2000"
+    )
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from frappe_data_pipelines_spark.plans.catalog import queries
-    from frappe_data_pipelines_spark.session import get_spark
+    from frappe_data_pipelines_spark.sources.tables import load_table
 
-    spark = get_spark(app_name="fdp-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    q = queries()
-
-    # warm-up: JVM/codegen startup, parquet column bytes (count() alone only
-    # touches footers), OS page cache, and the Python UDF worker pool are
-    # one-time costs of the session, not part of any query's plan — don't
-    # bill them to whichever query happens to run first
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as F
-
-    from frappe_data_pipelines_spark.sources.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        try:
-            df = load_table(spark, sf_dir, t)
-            df.agg(*[F.count(c).alias(c) for c in df.columns]).collect()
-        except Exception:  # noqa: BLE001 — missing optional table
-            pass
-    # pre-fork the Arrow python workers (numpy/pandas import cost)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
+    timer = open_timer("fdp-bench", sf_dir)
+    spark = timer.spark
 
     # build tier first: constructions run once, their caches serve the
     # cached headline rows below
-    build_tier: dict[str, float] = {}
-    for name in BUILD_TIER:
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            try:
-                df = q[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            except Exception as e:  # noqa: BLE001
-                best = -1.0
-                print(f"# bench build error {name}: {e}", file=sys.stderr)
-                break
-        build_tier[name] = round(best, 3)
+    build_tier = timer.tier(BUILD_TIER, 2, "build")
     spark.catalog.clearCache()
 
-    # best-of-3 per query, ROUND-ROBIN passes: the host is shared (driver
-    # verify jobs, page-cache drops), and back-to-back repeats put all of a
-    # query's samples inside the same contention window — interleaving
-    # spreads a bad window across many queries' single samples instead
-    timings: dict[str, float] = {}
-    for _ in range(3):
-        for name in HEADLINE:
-            if timings.get(name, 0) < 0:
-                continue  # errored on an earlier pass
-            t0 = time.time()
-            try:
-                df = q[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                timings[name] = min(timings.get(name, dt), dt)
-            except Exception as e:  # noqa: BLE001
-                timings[name] = -1.0
-                print(f"# bench error {name}: {e}", file=sys.stderr)
-        # queries may cache intermediates by design (Q11/Q15-style reuse);
-        # drop them between passes so caches don't accumulate
-        spark.catalog.clearCache()
-    timings = {n: round(t, 3) for n, t in timings.items()}
+    timings = timer.round_robin(HEADLINE, 3)
     total = round(sum(t for t in timings.values() if t > 0), 3)
 
     # legacy tier: timed (best-of-2) so the r11 query names stay in the
     # reported map, but not summed into `value` (see LEGACY_TIER note)
-    legacy: dict[str, float] = {}
-    for name in LEGACY_TIER:
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            try:
-                df = q[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            except Exception as e:  # noqa: BLE001
-                best = -1.0
-                print(f"# bench legacy error {name}: {e}", file=sys.stderr)
-                break
-        legacy[name] = round(best, 3)
+    legacy = timer.tier(LEGACY_TIER, 2, "legacy")
     spark.catalog.clearCache()
     # the reported `queries` map: headline + build tier + legacy tier —
     # a superset of every prior round's keys
     report_queries = {**timings, **build_tier, **legacy}
 
     # --- automatic mover adjudication (VERDICT r8 task 5, r9 task 2) -------
-    # Any query moving >15% (and >0.3s absolute) against the latest
-    # recorded BENCH_r{N}.json gets an ISOLATED best-of-3 re-run right
-    # here, and the A/B verdict ships inside the artifact — the manual
-    # late-day-throttling investigations of rounds 6-8 (BENCH_RUNS_*.json)
-    # become a machine step. "environmental" = the isolated best returns
-    # to within 15% of the prior round; "real" = it does not.
+    # Any query moving against the latest recorded prior (tools.measure's
+    # mover rule) gets an ISOLATED best-of-3 re-run right here, and the A/B
+    # verdict ships inside the artifact — the manual late-day-throttling
+    # investigations of rounds 6-8 (BENCH_RUNS_*.json) become a machine
+    # step.
     #
     # CANARY NORMALIZATION (VERDICT r9: the r9 adjudicator labeled three
     # queries whose plans had ZERO code changes "real" inside a window the
-    # canary showed 2.17x throttled). tpch_q6 — pure-JVM scan+agg,
-    # untouched since round 2 — is the host-drift meter: every cross-round
-    # comparison divides the current reading by the same-window canary
-    # ratio (current q6 / prior q6) before labeling, and the canary block
-    # ships in the artifact. If q6 itself ever regresses by CODE, the plan
-    # audit + its own BASELINE row catch it — normalization only launders
-    # host drift, not plan changes.
+    # canary showed 2.17x throttled): every cross-round comparison divides
+    # the current reading by the same-window canary ratio (current q6 /
+    # prior q6) before labeling, and the canary block ships in the
+    # artifact. If q6 itself ever regresses by CODE, the plan audit + its
+    # own BASELINE row catch it — normalization only launders host drift,
+    # not plan changes.
+    #
+    # BRACKETED per-mover adjudication (VERDICT r10 task 1): sampling the
+    # canary once for the whole phase let a throttle burst inside one
+    # mover's isolated A/B go unseen (the host swings 2.3-5.5x within
+    # minutes), so each mover gets its OWN canary bracket, retried once if
+    # unstable (tools.measure.bracket_verdict).
     adjudication = []
     canary_block = None
-    CANARY = "tpch_q6_forecast_revenue"
-
-    def _isolated_best3(name: str) -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            df = q[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
     try:
         here = os.path.dirname(os.path.abspath(__file__))
         prior, prior_src = load_prior_timings(
@@ -392,57 +320,21 @@ def main() -> None:
         movers = [
             n for n, t in timings.items()
             if n != CANARY and t > 0 and prior.get(n, 0) > 0
-            and abs(t / ratio - prior[n]) > max(0.15 * prior[n], 0.3)
+            and moved(t / ratio, prior[n])
         ]
-
-        # BRACKETED per-mover adjudication (VERDICT r10 task 1): the r10
-        # adjudicator sampled the canary ONCE for the whole phase, so a
-        # throttle burst landing inside one mover's isolated A/B was
-        # invisible (the host swings 2.3-5.5x within minutes). Now each
-        # mover's isolated best-of-3 is bracketed by its OWN canary
-        # best-of-3 immediately before and after; a bracket whose two
-        # readings disagree >1.3x is retried once and, if still unstable,
-        # the verdict is "unadjudicable" — never "real" on a reading the
-        # canary cannot vouch for. Normalization divides by the geometric
-        # mean of the two bracket ratios.
-        def _bracketed(name: str) -> dict:
-            rec = {"query": name, "prior_round": round(prior[name], 3),
-                   "suite_best3": timings[name]}
-            for attempt in range(2):
-                spark.catalog.clearCache()
-                c_b = _isolated_best3(CANARY)
-                spark.catalog.clearCache()
-                best = _isolated_best3(name)
-                spark.catalog.clearCache()
-                c_a = _isolated_best3(CANARY)
-                rec.update({
-                    "isolated_best3": round(best, 3),
-                    "canary_before": round(c_b, 3),
-                    "canary_after": round(c_a, 3),
-                })
-                spread = max(c_b, c_a) / max(min(c_b, c_a), 1e-9)
-                if spread <= 1.3:
-                    g_ratio = (
-                        (c_b * c_a) ** 0.5 / prior[CANARY]
-                        if prior.get(CANARY, 0) > 0 else 1.0
-                    )
-                    norm = best / g_ratio
-                    moved = abs(norm - prior[name]) > max(
-                        0.15 * prior[name], 0.3
-                    )
-                    rec.update({
-                        "canary_ratio": round(g_ratio, 3),
-                        "normalized_best3": round(norm, 3),
-                        "verdict": "real" if moved else "environmental",
-                    })
-                    return rec
-                rec["bracket_spread"] = round(spread, 3)
-            rec["verdict"] = "unadjudicable"
-            return rec
-
         if prior.get(CANARY, 0) > 0:
             for name in movers:
-                adjudication.append(_bracketed(name))
+                best, before, after = timer.bracket(
+                    lambda: timer.best_of(name, 3)[0],
+                    f"adjudicate:{name}", attempts=2,
+                )
+                adjudication.append({
+                    "query": name,
+                    "prior_round": round(prior[name], 3),
+                    "suite_best3": timings[name],
+                    **bracket_verdict(best, before, after,
+                                      prior[name], prior[CANARY]),
+                })
         spark.catalog.clearCache()
     except Exception as e:  # noqa: BLE001 — adjudication must never sink the bench
         print(f"# bench adjudication error: {e}", file=sys.stderr)
@@ -518,7 +410,7 @@ def main() -> None:
         if str(out["sf"]) == "0.1" and os.path.isfile(v3_path):
             with open(v3_path) as f:
                 v3 = json.load(f)
-            anchor = v3.get("clean_q6_ref", 0.199)
+            anchor = v3.get("clean_q6_ref", CLEAN_Q6_REF)
             cur_ratio = (
                 timings.get(CANARY, 0) / anchor
                 if timings.get(CANARY, 0) > 0 else None

@@ -1,6 +1,5 @@
-"""Isolated, canary-bracketed A/B timings for catalog queries — the
-round-13 measurement harness (VERDICT r12 task 2: settle movers with
-clean-window brackets; guide §1).
+"""Isolated, canary-bracketed A/B timings for catalog queries (VERDICT r12
+task 2: settle movers with clean-window brackets; guide §1).
 
 Usage:
     python tools/ab_bench.py [--reps N] [--sf SF_DIR] [--env K=V ...] \
@@ -8,12 +7,11 @@ Usage:
 
 Each QUERY is timed ISOLATED (noop sink, best-of-``reps``), bracketed by
 its own canary (tpch_q6) best-of-3 immediately before and after — the
-bench.py adjudication discipline, reusable from the shell. ``--env K=V``
-pairs are set before the engine imports so code-shape toggles (e.g.
-FDP_KN_BROADCAST_MAX_BYTES=0) select the variant under test inside the
-SAME JVM lineage as the control run. Output: one JSON line per query plus
-a trailing summary line; everything also appended to BENCH_RUNS_r13.json
-via tools/record_run.py-style manual merge (the caller owns the file).
+bench.py adjudication discipline (``tools/measure.py``), reusable from the
+shell. ``--env K=V`` pairs are set before the engine imports so code-shape
+toggles (e.g. FDP_KN_BROADCAST_MAX_BYTES=0) select the variant under test
+inside the SAME JVM lineage as the control run. Output: one JSON line per
+query plus a trailing summary line.
 """
 
 from __future__ import annotations
@@ -21,13 +19,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, ".")
 
-CANARY = "tpch_q6_forecast_revenue"
+from tools.measure import open_timer, spread  # noqa: E402
 
 
 def main() -> None:
@@ -43,62 +40,21 @@ def main() -> None:
         k, _, v = kv.partition("=")
         os.environ[k] = v
 
-    from frappe_data_pipelines_spark.plans.catalog import queries
-    from frappe_data_pipelines_spark.session import get_spark
-
-    spark = get_spark(app_name=f"fdp-ab-{args.label or 'bench'}")
-    spark.sparkContext.setLogLevel("ERROR")
-    q = queries()
-
-    # session warm-up (bench.py discipline): JVM/codegen, page cache,
-    # Python worker pool
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as F
-
-    from frappe_data_pipelines_spark.sources.tables import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        try:
-            df = load_table(spark, args.sf, t)
-            df.agg(*[F.count(c).alias(c) for c in df.columns]).collect()
-        except Exception:  # noqa: BLE001
-            pass
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
-
-    def run_once(name: str) -> float:
-        t0 = time.time()
-        df = q[name](spark, args.sf)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    def best_of(name: str, n: int) -> tuple[float, list[float]]:
-        ts = [run_once(name) for _ in range(n)]
-        return min(ts), ts
-
+    timer = open_timer(f"fdp-ab-{args.label or 'bench'}", args.sf)
     results = []
     for name in args.queries:
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"ab:{args.label}:canary-before")
-        c_b, _ = best_of(CANARY, 3)
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"ab:{args.label}:{name}")
-        best, ts = best_of(name, args.reps)
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"ab:{args.label}:canary-after")
-        c_a, _ = best_of(CANARY, 3)
-        spark.sparkContext.setJobDescription(None)
-        spread = max(c_b, c_a) / max(min(c_b, c_a), 1e-9)
+        (best, ts), c_b, c_a = timer.bracket(
+            lambda: timer.best_of(name, args.reps), f"ab:{args.label}:{name}"
+        )
         rec = {
             "query": name,
             "label": args.label,
             "best": round(best, 3),
-            "median": round(sorted(ts)[len(ts) // 2], 3),
+            "median": round(statistics.median(ts), 3),
             "reps": [round(t, 3) for t in ts],
             "canary_before": round(c_b, 3),
             "canary_after": round(c_a, 3),
-            "bracket_spread": round(spread, 3),
+            "bracket_spread": round(spread(c_b, c_a), 3),
             "env": args.env,
             "sf": args.sf,
         }

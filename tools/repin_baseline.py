@@ -15,10 +15,9 @@ in CLEAN-WINDOW UNITS instead:
     unstable, the row is recorded with "unstable": true — the reading
     ships with its uncertainty instead of posing as a clean pin.
 
-CLEAN_Q6_REF = 0.199 s is BENCH_r08's clean-window q6 (the repo's only
-gate-passing sample; see BASELINE.md) — the same anchor bench.py's
-baseline_v3 comparison divides by, so pin and reading cancel the anchor
-and only the genuine plan-speed ratio survives.
+CLEAN_Q6_REF (``tools/measure.py``) is BENCH_r08's clean-window q6 — the
+same anchor bench.py's baseline_v3 comparison divides by, so pin and
+reading cancel the anchor and only the genuine plan-speed ratio survives.
 
 Usage: python tools/repin_baseline.py [--out BASELINE_V3.json]
 Writes the machine-readable pin table bench.py reads every sf0.1 run.
@@ -36,9 +35,13 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
-CLEAN_Q6_REF = 0.199  # BENCH_r08 clean-window q6 best-of-3 (BASELINE.md)
-CANARY = "tpch_q6_forecast_revenue"
-SPREAD_MAX = 1.3
+from tools.measure import (  # noqa: E402
+    CLEAN_Q6_REF,
+    SPREAD_MAX,
+    canary_ratio,
+    open_timer,
+    spread,
+)
 
 # the 14 v2-pinned queries (BASELINE.md round-2 re-baseline tables), by
 # catalog name
@@ -65,61 +68,24 @@ def main() -> int:
     ap.add_argument("--out", default=os.path.join(ROOT, "BASELINE_V3.json"))
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from frappe_data_pipelines_spark.plans.catalog import queries
-    from frappe_data_pipelines_spark.session import get_spark
-    from frappe_data_pipelines_spark.sources.tables import TABLE_NAMES, load_table
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="fdp-repin-baseline")
-    spark.sparkContext.setLogLevel("ERROR")
-    q = queries()
-
-    # same warm-up as bench.py: JVM/codegen, parquet bytes, Arrow workers
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLE_NAMES:
-        try:
-            df = load_table(spark, sf_dir, t)
-            df.agg(*[F.count(c).alias(c) for c in df.columns]).collect()
-        except Exception:  # noqa: BLE001 — missing optional table
-            pass
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
-
-    def best3(name: str) -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            q[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return best
+    timer = open_timer("fdp-repin-baseline", sf_dir)
 
     started = int(time.time())
     rows: dict[str, dict] = {}
     for name in PINNED:
-        rec: dict = {}
-        for attempt in range(3):
-            spark.catalog.clearCache()
-            c_b = best3(CANARY)
-            spark.catalog.clearCache()
-            raw = best3(name)
-            spark.catalog.clearCache()
-            c_a = best3(CANARY)
-            spread = max(c_b, c_a) / max(min(c_b, c_a), 1e-9)
-            g = (c_b * c_a) ** 0.5
-            rec = {
-                "raw": round(raw, 3),
-                "canary_before": round(c_b, 3),
-                "canary_after": round(c_a, 3),
-                "bracket_spread": round(spread, 3),
-                "bracket_ratio": round(g / CLEAN_Q6_REF, 3),
-                "normalized": round(raw / (g / CLEAN_Q6_REF), 3),
-            }
-            if spread <= SPREAD_MAX:
-                break
+        raw, c_b, c_a = timer.bracket(
+            lambda: timer.best_of(name, 3)[0], f"repin:{name}", attempts=3
+        )
+        ratio = canary_ratio(c_b, c_a, CLEAN_Q6_REF)
+        rec = {
+            "raw": round(raw, 3),
+            "canary_before": round(c_b, 3),
+            "canary_after": round(c_a, 3),
+            "bracket_spread": round(spread(c_b, c_a), 3),
+            "bracket_ratio": round(ratio, 3),
+            "normalized": round(raw / ratio, 3),
+        }
         rec["unstable"] = rec["bracket_spread"] > SPREAD_MAX
         rows[name] = rec
         print(f"{name}: raw {rec['raw']}s bracket {rec['bracket_ratio']}x "
@@ -131,7 +97,7 @@ def main() -> int:
         "version": 3,
         "method": "per-pin bracketed q6 canaries (best-of-3 each side), "
                   "geometric-mean normalization to the r8 clean window; "
-                  "spread >1.3 retried 3x then flagged unstable",
+                  f"spread >{SPREAD_MAX} retried 3x then flagged unstable",
         "clean_q6_ref": CLEAN_Q6_REF,
         "sf_dir": sf_dir,
         "started_unix": started,

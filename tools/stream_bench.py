@@ -29,32 +29,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.measure import CLEAN_Q6_REF, Timer, canary_ratio  # noqa: E402
+
 
 def pctl(xs: list[float], p: float) -> float:
     s = sorted(xs)
     i = min(len(s) - 1, int(round(p * (len(s) - 1))))
     return s[i]
-
-
-CLEAN_Q6_REF = 0.199  # BENCH_r08's clean-window q6 best-of-3 (BASELINE.md)
-
-
-def q6_canary(spark, sf_dir: str) -> float:
-    """Best-of-3 q6 noop — the host-drift meter, sampled immediately
-    around each stream config so every artifact row carries its own
-    throttle context (VERDICT r10 task 3: the r10 doors_on_10x_waves
-    549→318 docs/s move shipped with no canary stamp, so environment vs
-    plan was undecidable)."""
-    from frappe_data_pipelines_spark.plans.catalog import queries
-
-    q = queries()["tpch_q6_forecast_revenue"]
-    best = None
-    for _ in range(3):
-        t0 = time.time()
-        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3)
 
 
 def run_config(
@@ -170,15 +151,18 @@ def main() -> None:
         [(1, "zzxqunobtanium"), (2, "qqzzforbidden")], "term_id long, term string"
     )
 
+    timer = Timer(spark, sf_dir)
+
     def bracketed(label, fn):
-        c_b = q6_canary(spark, sf_dir)
-        res = fn()
-        c_a = q6_canary(spark, sf_dir)
-        res["canary_before_sec"] = c_b
-        res["canary_after_sec"] = c_a
-        res["canary_ratio"] = round(
-            ((c_b * c_a) ** 0.5) / CLEAN_Q6_REF, 3
-        )
+        # every artifact row carries its own canary context (VERDICT r10
+        # task 3: a doors_on_10x_waves 549->318 docs/s move shipped with
+        # no canary stamp, so environment vs plan was undecidable). No
+        # cache drop: the waves and the scrub corpus are cached up front
+        # so the stream's timed writes do not re-read them.
+        res, c_b, c_a = timer.bracket(fn, f"stream:{label}", clear_cache=False)
+        res["canary_before_sec"] = round(c_b, 3)
+        res["canary_after_sec"] = round(c_a, 3)
+        res["canary_ratio"] = round(canary_ratio(c_b, c_a, CLEAN_Q6_REF), 3)
         return res
 
     off = bracketed("doors_off", lambda: run_config(spark, waves, docs_per_wave))
