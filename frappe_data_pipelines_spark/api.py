@@ -69,6 +69,8 @@ class SearchService:
         hits = filtered_knn(self.vectors, qv, filters or {}, k=k,
                             vec_col=self.vec_col, id_col=self.id_col)
         if use_reranker and self.corpus is not None:
+            # broadcast the <= top_k x 5 candidates, never the corpus
+            hits = F.broadcast(hits)
             cands = hits.join(self.corpus, hits[self.id_col] == self.corpus["doc_id"]) \
                 if self.id_col != "doc_id" else hits.join(self.corpus, "doc_id")
             if self.reranker is not None:
@@ -395,28 +397,43 @@ def search_documents(
     """The reference's whitelisted HTTP entry point
     (search_service.py:324-358), byte-compatible result dicts: chunk_id,
     score, text, context, source_file, section_path. DataFrame plan runs
-    distributed; only the top_k dicts reach the caller."""
+    distributed; only the top_k dicts reach the caller.
+
+    The top-k hits are collected first; then only their corpus rows are
+    fetched (an ``isin`` on ``doc_id`` that the scan prunes by) and merged
+    here, as a broadcast left join on the hit id would: hit order kept, one
+    row per matching corpus row, corpus fields None for a hit with no
+    corpus row, and a hit field wins a name clash. No request ships the
+    corpus."""
     if document_id is not None:
         hits = service.search_by_document(query, document_id, top_k=int(top_k))
     else:
         hits = service.search(query, top_k=int(top_k))
+    rows = [r.asDict() for r in hits.collect()]
     if service.corpus is not None and "text" not in hits.columns:
-        hits = hits.join(
-            service.corpus, hits[service.id_col] == service.corpus["doc_id"], "left"
-        )
-    rows = hits.collect()
-
-    def get(r, k, default=None):
-        return r[k] if k in r.__fields__ else default
-
+        rows = _merge_corpus_rows(rows, service.corpus, service.id_col)
     return [
         {
-            "chunk_id": get(r, service.id_col),
-            "score": get(r, "score"),
-            "text": get(r, service.text_col, ""),
-            "context": get(r, "context_prefix", ""),
-            "source_file": get(r, "source", None),
-            "section_path": get(r, "section_path", "Document"),
+            "chunk_id": r.get(service.id_col),
+            "score": r.get("score"),
+            "text": r.get(service.text_col, ""),
+            "context": r.get("context_prefix", ""),
+            "source_file": r.get("source", None),
+            "section_path": r.get("section_path", "Document"),
         }
         for r in rows
     ]
+
+
+def _merge_corpus_rows(hits: list[dict], corpus: DataFrame, id_col: str) -> list[dict]:
+    """Left-join collected ``hits`` to ``corpus`` on ``doc_id`` driver-side,
+    reading only the corpus rows whose ``doc_id`` is a hit id. Rows sharing
+    an id come last-scanned first, the order a broadcast hash join's build
+    side returns them in."""
+    ids = list(dict.fromkeys(h[id_col] for h in hits if h[id_col] is not None))
+    matches: dict = {}
+    if ids:
+        for c in reversed(corpus.filter(F.col("doc_id").isin(ids)).collect()):
+            matches.setdefault(c["doc_id"], []).append(c.asDict())
+    missing = [dict.fromkeys(corpus.columns)]
+    return [{**c, **h} for h in hits for c in matches.get(h[id_col], missing)]

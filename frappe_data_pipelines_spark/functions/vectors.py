@@ -1,10 +1,14 @@
 """Vector math as JVM-side column expressions (no Python in the hot path).
 
 Cosine / dot / norm are built from Spark higher-order functions
-(``zip_with`` + ``aggregate``), so they run inside whole-stage codegen and
-never cross the Python boundary. This is the engine's replacement for the
-reference's Qdrant cosine scoring (reference: services/qdrant_service.py:78-84
-fixes Distance.COSINE at collection creation; search at :139-145).
+(``zip_with`` + ``aggregate``), so they run in the JVM and never cross the
+Python boundary. Higher-order functions do not support whole-stage codegen:
+the executed plan shows the scoring ``Project`` outside any ``[codegen id]``
+span, so these expressions are interpreted per row. Keep them lean (one
+``zip_with`` per dot product, no ``zip_with`` in a norm). This is the
+engine's replacement for the reference's Qdrant cosine scoring (reference:
+services/qdrant_service.py:78-84 fixes Distance.COSINE at collection
+creation; search at :139-145).
 
 All math is done in DOUBLE with a sequential left fold, which matches DuckDB's
 ``list_*`` semantics on ``DOUBLE[]`` — required for oracle hash parity.
@@ -30,7 +34,9 @@ def dot_product(a: Column, b: Column) -> Column:
 
 
 def vector_norm(a: Column) -> Column:
-    return F.sqrt(dot_product(a, a))
+    """sqrt of the sequential fold of x*x: the same arithmetic, in the same
+    order, as ``sqrt(dot_product(a, a))`` without zip_with's per-row copy."""
+    return F.sqrt(F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:

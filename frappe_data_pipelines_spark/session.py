@@ -48,6 +48,24 @@ def _with_stack_size(opts: str, xss: str = "-Xss32m") -> str:
     return f"{opts} {xss}".strip()
 
 
+DRIVER_MEMORY_CAP_MB = 16 << 10
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: half
+    of the host's MemTotal, at least 1 GiB and never above 16 GiB. In local
+    mode the driver heap is the engine's whole heap; the other half is left
+    to the Python workers and the OS, so a heavy job fails inside Java
+    instead of being OOM-killed by the kernel. Where MemTotal cannot be
+    read (no ``/proc``), the cap is the default."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, ValueError, IndexError, StopIteration):
+        return f"{DRIVER_MEMORY_CAP_MB}m"
+    return f"{max(1024, min(DRIVER_MEMORY_CAP_MB, total_kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "frappe-data-pipelines-spark",
     master: str | None = None,
@@ -81,8 +99,11 @@ def get_spark(
         # rejects; read as long and convert in sources.tables.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode runs every executor thread inside the driver JVM, so
-        # the "driver" heap is the whole engine's heap — size accordingly
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # the "driver" heap is the whole engine's heap — sized from the host
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # Stopping a stream mid-batch makes Spark classify the interrupted
         # batch's exception (StreamExecution.isInterruptionException) by
         # running a Scala regex over the exception MESSAGE — for an

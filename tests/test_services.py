@@ -564,3 +564,151 @@ def test_jvm_has_deep_stack_on_engine_session(spark):
     from frappe_data_pipelines_spark.session import jvm_has_deep_stack
 
     assert jvm_has_deep_stack(spark) is True
+
+
+# --- serving path: literal-bound scoring, top-k text fetch, rerank broadcast ---
+
+QUERY = "fast join table scan"
+
+
+@pytest.fixture(scope="module")
+def serve_tables(spark, tmp_path_factory):
+    """A 64-dim vectors table and a corpus keyed on ``doc_id`` that carries
+    the reference's payload columns plus a clashing ``score``. The first
+    hit of QUERY has two corpus rows and the second has none."""
+    import numpy as np
+
+    root = tmp_path_factory.mktemp("serve")
+    rng = np.random.default_rng(11)
+    vecs = [(i, i % 4, [float(x) for x in rng.normal(size=64)]) for i in range(60)]
+    spark.createDataFrame(vecs, "vec_id long, label long, embedding array<double>") \
+        .write.parquet(str(root / "vectors"))
+    vectors = spark.read.parquet(str(root / "vectors"))
+    first, second = [r["vec_id"] for r in SearchService(vectors=vectors)
+                     .search(QUERY, top_k=2).collect()]
+    rows = [(i, f"chunk {i}", f"ctx {i}", f"file{i}.pdf", f"Doc > S{i}", -1.0)
+            for i in range(60) if i != second]
+    rows.append((first, f"chunk {first} again", "ctx b", "other.pdf", "Doc > B", -2.0))
+    spark.createDataFrame(
+        rows, "doc_id long, text string, context_prefix string, source string, "
+        "section_path string, score double",
+    ).repartition(2).write.parquet(str(root / "corpus"))
+    return vectors, spark.read.parquet(str(root / "corpus")), first, second
+
+
+def _left_join_form(svc, query, top_k, document_id=None):
+    """search_documents as it was: collect the hits left-joined to the
+    whole corpus (the reference result for the driver-side merge)."""
+    hits = (svc.search_by_document(query, document_id, top_k=top_k)
+            if document_id is not None else svc.search(query, top_k=top_k))
+    rows = hits.join(svc.corpus, hits[svc.id_col] == svc.corpus["doc_id"], "left").collect()
+
+    def get(r, k, default=None):
+        return r[k] if k in r.__fields__ else default
+
+    return [
+        {
+            "chunk_id": get(r, svc.id_col),
+            "score": get(r, "score"),
+            "text": get(r, svc.text_col, ""),
+            "context": get(r, "context_prefix", ""),
+            "source_file": get(r, "source", None),
+            "section_path": get(r, "section_path", "Document"),
+        }
+        for r in rows
+    ]
+
+
+def test_search_documents_equals_left_join_form(serve_tables):
+    from frappe_data_pipelines_spark.api import search_documents
+
+    vectors, corpus, first, second = serve_tables
+    svc = SearchService(vectors=vectors, corpus=corpus)
+    for top_k, doc in ((5, None), (8, None), (4, 1), (3, 2)):
+        assert search_documents(svc, QUERY, top_k=top_k, document_id=doc) \
+            == _left_join_form(svc, QUERY, top_k, doc)
+    out = search_documents(svc, QUERY, top_k=5)
+    assert [d["chunk_id"] for d in out[:3]] == [first, first, second]
+    assert {d["text"] for d in out[:2]} == {f"chunk {first}", f"chunk {first} again"}
+    assert out[2]["text"] is None and out[2]["context"] is None  # no corpus row
+    assert not {d["score"] for d in out} & {-1.0, -2.0}  # a hit column wins a clash
+
+
+def _subtrees(plan: str, suffix: str) -> list[str]:
+    """Every subtree, in the final section of an executed plan, rooted at
+    a node whose name ends with ``suffix``."""
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    out = []
+    for i, line in enumerate(lines):
+        name = line.lstrip(" :+-|").split(" ")[0]
+        if name.endswith(suffix):
+            end = next((j for j in range(i + 1, len(lines))
+                        if depth(lines[j]) <= depth(line)), len(lines))
+            out.append("\n".join(lines[i:end]))
+    return out
+
+
+def _is_corpus_scan(line: str) -> bool:
+    return "FileScan" in line and "doc_id#" in line
+
+
+def test_search_documents_never_ships_the_corpus(serve_tables, monkeypatch):
+    from frappe_data_pipelines_spark.api import search_documents
+
+    vectors, corpus, _, _ = serve_tables
+    svc = SearchService(vectors=vectors, corpus=corpus)
+    plans = []
+    collect = type(vectors).collect
+
+    def spy(self):
+        out = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(type(vectors), "collect", spy)
+    search_documents(svc, QUERY, top_k=5)
+    search_documents(svc, QUERY, top_k=3, document_id=1)
+    assert plans
+    for plan in plans:
+        for sub in _subtrees(plan, "Exchange"):
+            assert not any(_is_corpus_scan(ln) for ln in sub.splitlines()), sub
+    fetches = [ln for p in plans for ln in p.splitlines() if _is_corpus_scan(ln)]
+    assert fetches and all("In(doc_id" in ln for ln in fetches)  # pushed into the scan
+
+
+def test_search_binds_query_norm_once(serve_tables):
+    vectors, _, _, _ = serve_tables
+    df = SearchService(vectors=vectors).search(QUERY, top_k=5)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("zip_with(") == 1  # dot(a, q) only: |q| and |a| fold without it
+
+
+def test_rerank_broadcasts_candidates_not_corpus(serve_tables):
+    vectors, corpus, _, _ = serve_tables
+    df = SearchService(vectors=vectors, corpus=corpus).search(QUERY, top_k=3, use_reranker=True)
+    assert len(df.collect()) == 3
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    subs = _subtrees(plan, "BroadcastExchange")
+    assert subs
+    for sub in subs:
+        assert "TakeOrderedAndProject" in sub
+        assert not any(_is_corpus_scan(ln) for ln in sub.splitlines()), sub
+
+
+def test_default_driver_memory_from_memtotal(tmp_path):
+    from frappe_data_pipelines_spark.session import default_driver_memory
+
+    def heap(text):
+        p = tmp_path / "meminfo"
+        p.write_text(text)
+        return default_driver_memory(str(p))
+
+    assert heap("MemTotal:       16479424 kB\nMemFree: 1 kB\n") == "8046m"  # 15.7 GiB host
+    assert heap("MemFree: 1 kB\nMemTotal: 67108864 kB\n") == "16384m"  # 64 GiB: capped
+    assert heap("MemTotal: 1048576 kB\n") == "1024m"                    # 1 GiB: floor
+    assert heap("MemFree: 1 kB\n") == "16384m"                          # no MemTotal
+    assert default_driver_memory(str(tmp_path / "absent")) == "16384m"

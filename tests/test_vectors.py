@@ -81,3 +81,112 @@ def test_embedder_deterministic_and_normalized():
     assert abs(float(np.linalg.norm(v1)) - 1.0) < 1e-5
     # different text → different vector
     assert e.embed(["completely different text"])[0] != v1
+
+
+# --- the serving path's folded forms vs the unfolded cosine they replace ---
+
+
+def _unfolded_dot(a, b):
+    return F.aggregate(
+        F.zip_with(a.cast("array<double>"), b.cast("array<double>"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _unfolded_norm(a):
+    return F.sqrt(_unfolded_dot(a, a))
+
+
+def _array_of_lits(q):
+    """The query binding every search path used before the literal: one
+    ``lit`` per component under a cast ``array``."""
+    return F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+
+
+def _unfolded_score(a, q):
+    """round(cosine, 6) as every search path scored it before the fold:
+    |q| recomputed per row and |a| through zip_with(a, a)."""
+    return F.round(F.try_divide(_unfolded_dot(a, q), _unfolded_norm(a) * _unfolded_norm(q)), 6)
+
+
+@pytest.fixture(scope="module")
+def edge_df(spark):
+    data = [
+        (1, [1.0, -2.0, 3.5, 0.25]),          # negative components
+        (2, [0.0, 0.0, 0.0, 0.0]),            # zero stored vector
+        (3, [1.0, None, 2.0, 3.0]),           # null element
+        (4, [1.0, 2.0, 3.0]),                 # length mismatch
+        (5, [-0.1, 0.7, -0.3, 0.9]),
+        (6, None),                            # null vector
+        (7, [1e-3, 2.5, -7.25, 1.0 / 3.0]),
+        (8, []),
+    ]
+    return spark.createDataFrame(data, "vec_id long, v array<double>")
+
+
+EDGE_QUERIES = [
+    [0.3, -1.2, 2.0, 0.1],
+    [0.0, 0.0, 0.0, 0.0],                     # zero query
+    [-0.5, -0.25, -0.125, -1.0 / 7.0],
+    [1.0, 2.0, 3.0],                          # length mismatch vs most rows
+    list(np.random.default_rng(7).normal(size=4)),
+]
+
+
+def _by_id(df):
+    return {r["vec_id"]: r["score"] for r in df.select("vec_id", "score").collect()}
+
+
+def test_vector_norm_fold_bit_equal_to_zip_with_form(edge_df):
+    rows = edge_df.select(
+        "vec_id",
+        vector_norm(F.col("v")).alias("new"),
+        _unfolded_norm(F.col("v")).alias("old"),
+    ).collect()
+    assert [r["new"] for r in rows] == [r["old"] for r in rows]
+    got = {r["vec_id"]: r["new"] for r in rows}
+    assert got[3] is None and got[6] is None and got[2] == 0.0 and got[8] == 0.0
+
+
+def test_score_literal_query_bit_equal_to_unfolded_cosine(edge_df):
+    from frappe_data_pipelines_spark.operators.search import _score
+
+    for q in EDGE_QUERIES:
+        new = _by_id(_score(edge_df, q, "v"))
+        old = _by_id(edge_df.withColumn("score", _unfolded_score(F.col("v"), _array_of_lits(q))))
+        assert new == old, q
+    zero = _by_id(_score(edge_df, EDGE_QUERIES[1], "v"))
+    assert all(s is None for s in zero.values())  # zero query → NULL, not 0/0
+    first = _by_id(_score(edge_df, EDGE_QUERIES[0], "v"))
+    assert first[2] is None and first[3] is None and first[4] is None
+    assert first[1] is not None and first[1] != 0.0
+
+
+def test_find_similar_bit_equal_to_unfolded_cosine(edge_df):
+    from frappe_data_pipelines_spark.operators.search import find_similar
+
+    for target in (1, 2, 3, 4, 5, 7):
+        new = _by_id(find_similar(edge_df, target, k=100, vec_col="v"))
+        tgt = edge_df.filter(F.col("vec_id") == target).select(
+            F.col("v").cast("array<double>").alias("__q")
+        )
+        old = _by_id(
+            edge_df.crossJoin(F.broadcast(tgt))
+            .withColumn("score", _unfolded_score(F.col("v"), F.col("__q")))
+            .filter(F.col("vec_id") != target)
+        )
+        assert new == old, target
+        assert target not in new
+
+
+def test_score_bit_equal_on_every_embedding_row(spark, sf_dir):
+    from frappe_data_pipelines_spark.operators.embed import HashingEmbedder
+    from frappe_data_pipelines_spark.operators.search import _score
+    from frappe_data_pipelines_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    stored = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
+    for q in (stored, HashingEmbedder().embed(["fast join table scan"])[0]):
+        old = _by_id(emb.withColumn("score", _unfolded_score(F.col("embedding"), _array_of_lits(q))))
+        assert _by_id(_score(emb, q, "embedding")) == old

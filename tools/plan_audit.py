@@ -82,6 +82,12 @@ CHECKS: dict[str, list] = {
          or "PushedFilters" in p),
         ("topk_not_full_sort", lambda p: "TakeOrderedAndProject" in p),
     ],
+    "c5_find_similar": [
+        # item-to-item: the 1-row target (vector + its norm) is broadcast
+        # into the scoring pass; top-k stays a heap, never a cartesian
+        ("topk_not_full_sort", lambda p: "TakeOrderedAndProject" in p),
+        ("no_cartesian", lambda p: "CartesianProduct" not in p),
+    ],
     "e2_topk_by_score": [
         ("topk_not_full_sort", lambda p: "TakeOrderedAndProject" in p),
     ],
