@@ -15,6 +15,10 @@ pluggable embedders).
 
 __version__ = "0.1.0"
 
+from frappe_data_pipelines_spark import lazyzip as _lazyzip
+
+_lazyzip.install_in_worker()  # a no-op outside a PySpark task
+
 from frappe_data_pipelines_spark.session import get_spark  # noqa: F401
 from frappe_data_pipelines_spark.api import PipelineEngine, SearchService  # noqa: F401
 from frappe_data_pipelines_spark.config import EngineSettings  # noqa: F401

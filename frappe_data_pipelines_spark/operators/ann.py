@@ -24,11 +24,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from frappe_data_pipelines_spark.functions.vectors import (
-    cosine_similarity,
-    dot_product,
-    vector_norm,
-)
+from frappe_data_pipelines_spark.functions.vectors import dot_product, vector_norm
+from frappe_data_pipelines_spark.operators.search import _score
 
 
 def _seeded_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -201,10 +198,8 @@ def ivf_search(
     q = np.array(query_vec, dtype=np.float64)
     d = [(i, float(np.sum((np.array(c) - q) ** 2))) for i, c in enumerate(centroids)]
     probe = [i for i, _ in sorted(d, key=lambda t: t[1])[:n_probe]]
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
     return (
-        assigned.filter(F.col("cluster").isin(probe))
-        .withColumn("score", F.round(cosine_similarity(F.col(vec_col), qcol), 6))
+        _score(assigned.filter(F.col("cluster").isin(probe)), query_vec, vec_col)
         .orderBy(F.desc("score"), F.col(id_col).asc())
         .limit(k)
     )
@@ -551,10 +546,9 @@ def pq_search_rerank(
     re-rank join is a broadcast of ``rerank_depth`` ids. Measured in
     ANN_SWEEP.json (pq+rerank rows)."""
     shortlist = pq_search(codes_df, codebooks, query_vec, k=rerank_depth, rotation=rotation).select("id")
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    semi = vectors.join(F.broadcast(shortlist), vectors[id_col] == F.col("id"), "left_semi")
     return (
-        vectors.join(F.broadcast(shortlist), vectors[id_col] == F.col("id"), "left_semi")
-        .withColumn("score", F.round(cosine_similarity(F.col(vec_col), qcol), 6))
+        _score(semi, query_vec, vec_col)
         .orderBy(F.desc("score"), F.col(id_col).asc())
         .limit(k)
     )
@@ -1253,11 +1247,9 @@ def filtered_ann_search(
     shortlist = hnsw_partition_search(
         vectors, qdf, k=k * overfetch, ef_search=ef_search, id_col=id_col, vec_col=vec_col
     ).select(id_col)
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    survivors = vectors.join(F.broadcast(shortlist), id_col, "left_semi").filter(predicate)
     return (
-        vectors.join(F.broadcast(shortlist), id_col, "left_semi")
-        .filter(predicate)
-        .withColumn("score", F.round(cosine_similarity(F.col(vec_col), qcol), 6))
+        _score(survivors, query_vec, vec_col)
         .orderBy(F.desc("score"), F.col(id_col).asc())
         .limit(k)
         .select(id_col, "score", F.lit("post-filter").alias("strategy"))
@@ -1570,8 +1562,6 @@ def bq_search(
     Scale shape: the corpus pays one scan over 1-bit codes (bounded
     map-side top-k via TakeOrderedAndProject — no global sort), and exact
     float math touches only the shortlist via a broadcast semi-join."""
-    from frappe_data_pipelines_spark.functions.vectors import cosine_similarity
-
     dim = len(query_vec)
     qwords = bq_query_words(query_vec)
     codes = bq_encode(vectors, dim, id_col, vec_col)
@@ -1587,15 +1577,12 @@ def bq_search(
         .limit(int(k) * int(overfetch))
         .select("id")
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    semi = vectors.join(
+        F.broadcast(shortlist.withColumnRenamed("id", id_col)), id_col, "left_semi"
+    )
     return (
-        vectors.join(
-            F.broadcast(shortlist.withColumnRenamed("id", id_col)), id_col, "left_semi"
-        )
-        .select(
-            id_col,
-            F.round(cosine_similarity(F.col(vec_col), qcol), 6).alias("score"),
-        )
+        _score(semi, query_vec, vec_col)
+        .select(id_col, "score")
         .orderBy(F.desc("score"), F.col(id_col).asc())
         .limit(int(k))
     )

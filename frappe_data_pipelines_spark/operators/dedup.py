@@ -314,6 +314,29 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return sig
 
 
+def _gemm_pair_blocks(batches, build, thr: float):
+    """``embedding_neardup_pairs``' kernel, at module level so that
+    unpickling it imports the package (and so installs ``lazyzip`` in the
+    worker): one GEMM of each Arrow batch against the broadcast build side."""
+    import numpy as np
+    import pandas as pd
+
+    ids_full, mat_full, nrm_full = build
+    for pa in batches:
+        if len(pa) == 0:
+            continue
+        mat_a = np.stack(pa["v"].to_numpy()).astype(np.float64)
+        ids_a = pa["id"].to_numpy()
+        with np.errstate(divide="ignore", invalid="ignore"):
+            nrm_a = np.sqrt((mat_a * mat_a).sum(axis=1))
+            sims = np.round((mat_a @ mat_full.T) / np.outer(nrm_a, nrm_full), 6)
+            ia, jb = np.nonzero(sims >= thr)  # NaN (zero norm) never passes
+        keep = ids_a[ia] < ids_full[jb]
+        yield pd.DataFrame(
+            {"id_a": ids_a[ia][keep], "id_b": ids_full[jb][keep], "cos": sims[ia, jb][keep]}
+        )
+
+
 def embedding_neardup_pairs(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -330,7 +353,6 @@ def embedding_neardup_pairs(
     the scale path for all-pairs similarity is ``ann.lsh_similarity_join``
     (bucket join, no n^2 term)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from frappe_data_pipelines_spark.operators.guards import (
@@ -364,20 +386,7 @@ def embedding_neardup_pairs(
     thr = float(threshold)
 
     def block(batches):
-        ids_full, mat_full, nrm_full = bcast.value
-        for pa in batches:
-            if len(pa) == 0:
-                continue
-            mat_a = np.stack(pa["v"].to_numpy()).astype(np.float64)
-            ids_a = pa["id"].to_numpy()
-            with np.errstate(divide="ignore", invalid="ignore"):
-                nrm_a = np.sqrt((mat_a * mat_a).sum(axis=1))
-                sims = np.round((mat_a @ mat_full.T) / np.outer(nrm_a, nrm_full), 6)
-                ia, jb = np.nonzero(sims >= thr)  # NaN (zero norm) never passes
-            keep = ids_a[ia] < ids_full[jb]
-            yield pd.DataFrame(
-                {"id_a": ids_a[ia][keep], "id_b": ids_full[jb][keep], "cos": sims[ia, jb][keep]}
-            )
+        return _gemm_pair_blocks(batches, bcast.value, thr)
 
     par = sess.sparkContext.defaultParallelism
     return base.repartition(par).mapInPandas(block, schema)

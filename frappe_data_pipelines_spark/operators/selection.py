@@ -702,6 +702,22 @@ def kn_read_score(
     )
 
 
+def _parquet_uncompressed_bytes(table_dir: str) -> int:
+    """Sum of the row groups' uncompressed ``total_byte_size`` over every
+    parquet footer under ``table_dir``: footers only, no scan."""
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    total = 0
+    for root, _, fns in _os.walk(table_dir):
+        for fn in fns:
+            if fn.endswith(".parquet"):
+                md = pq.read_metadata(_os.path.join(root, fn))
+                total += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return total
+
+
 def kn_load(spark, path: str):
     """Load a persisted KN LM: (bi, ctx, cont, meta). Schema-specified
     parquet reads (no footer-inference job). Split out of
@@ -722,15 +738,14 @@ def kn_load(spark, path: str):
     cont = spark.read.schema("w string, n1p_w bigint").parquet(
         _os.path.join(path, "cont")
     )
-    # stamp the LM's on-disk footprint so scoring can decide whether the
+    # stamp the LM's uncompressed size so scoring can decide whether the
     # dictionaries fit a broadcast (kn_score_against's map-side fast
-    # path) without an extra Spark job — a directory stat, not a scan
+    # path) without an extra Spark job; compressed file bytes understate
+    # what the broadcast holds
     meta = dict(meta)
-    meta["_lm_disk_bytes"] = sum(
-        _os.path.getsize(_os.path.join(root, fn))
+    meta["_lm_bytes"] = sum(
+        _parquet_uncompressed_bytes(_os.path.join(path, sub))
         for sub in ("bi", "ctx", "cont")
-        for root, _, fns in _os.walk(_os.path.join(path, sub))
-        for fn in fns
     )
     return bi, ctx, cont, meta
 
@@ -751,9 +766,9 @@ def kn_score_against(
     failing).
 
     Two shapes, same result (r13, guide §2.4/§3.1). When the persisted
-    LM fits a broadcast (``meta["_lm_disk_bytes"]`` under
-    ``FDP_KN_BROADCAST_MAX_BYTES``, default 256 MB of parquet — well
-    inside the guide's few-hundred-MB comfort zone after decompression),
+    LM fits a broadcast (``meta["_lm_bytes"]``, its uncompressed parquet
+    row-group bytes, under ``FDP_KN_BROADCAST_MAX_BYTES``, default 256 MB
+    — inside the guide's few-hundred-MB comfort zone),
     score at TRANSITION level: explode bigrams, probe the three
     broadcast dictionaries map-side, partial-aggregate per doc — the
     per-(doc,u,w) tf aggregate's full-corpus exchange disappears and the
@@ -771,8 +786,8 @@ def kn_score_against(
     max_bc = int(
         _os.environ.get("FDP_KN_BROADCAST_MAX_BYTES", str(256 << 20))
     )
-    disk = meta.get("_lm_disk_bytes")
-    if disk is not None and disk <= max_bc:
+    size = meta.get("_lm_bytes")
+    if size is not None and size <= max_bc:
         tr = _kn_doc_bigram_transitions(docs, id_col, text_col).withColumn(
             "tf", F.lit(1).cast("bigint")
         )

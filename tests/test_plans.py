@@ -140,3 +140,45 @@ def test_cache_dirs_keyed_on_source_fingerprint(tmp_path):
     assert "absent" in source_stat_key(sf, "nonexistent_table")
     assert "documents=" in source_stat_key(sf, "documents")
     assert os.path.basename(before["kn"]).startswith("fdp_kn_lm_")
+
+
+def test_source_stat_key_sees_same_size_same_mtime_replacements(tmp_path):
+    """``cp -p`` (``shutil.copy2``) of other bytes over the source keeps its
+    size and mtime; a rename over it keeps both too. Each still changes the
+    key, and so does rewriting one part file of a directory table."""
+    import os
+    import shutil
+    import time
+
+    from frappe_data_pipelines_spark.sources.tables import source_stat_key
+
+    sf = str(tmp_path)
+    src = tmp_path / "documents.parquet"
+    src.write_bytes(b"AAAA")
+    other = tmp_path / "other.bin"
+    other.write_bytes(b"BBBB")
+    st = src.stat()
+    os.utime(other, ns=(st.st_atime_ns, st.st_mtime_ns))
+    before = source_stat_key(sf, "documents")
+    time.sleep(0.05)  # the kernel stamps ctime at tick granularity
+    shutil.copy2(other, src)
+    assert (src.stat().st_size, src.stat().st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    copied = source_stat_key(sf, "documents")
+    assert copied != before
+    shutil.copy2(src, other)  # same bytes, size and mtime, another inode
+    os.replace(other, src)
+    assert source_stat_key(sf, "documents") != copied
+
+    table = tmp_path / "events.parquet" / "day=1"
+    table.mkdir(parents=True)
+    part = table / "part-0.parquet"
+    part.write_bytes(b"CCCC")
+    spare = tmp_path / "spare.bin"
+    spare.write_bytes(b"DDDD")
+    pst = part.stat()
+    os.utime(spare, ns=(pst.st_atime_ns, pst.st_mtime_ns))
+    before = source_stat_key(sf, "events")
+    assert "day=1/part-0.parquet@" in before
+    time.sleep(0.05)
+    shutil.copy2(spare, part)
+    assert source_stat_key(sf, "events") != before

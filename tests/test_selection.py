@@ -336,6 +336,50 @@ class TestKneserNeyPersisted:
         with pytest.raises(ValueError, match="discount"):
             kn_read_score(spark, ref, path, discount=0.5)
 
+    def test_broadcast_gate_reads_uncompressed_footer_bytes(self, spark, tmp_path, monkeypatch):
+        """The map-side broadcast shape is gated on the LM's uncompressed
+        row-group bytes from the parquet footers: a limit between the
+        compressed file bytes and that size keeps the shuffled shape."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        from frappe_data_pipelines_spark.operators.selection import (
+            kn_load,
+            kn_score_against,
+            kn_write,
+        )
+
+        # long, distinct, highly compressible tokens
+        words = ["x" * 400 + a + b for a in "abcdefghijklm" for b in "nopqrstu"]
+        ref = spark.createDataFrame(
+            [(1, True, " ".join(words))], "doc_id long, ref boolean, text string"
+        )
+        path = str(tmp_path / "kn_lm")
+        kn_write(ref, F.col("ref"), path)
+        bi, ctx, cont, meta = kn_load(spark, path)
+        files = [
+            os.path.join(root, fn)
+            for sub in ("bi", "ctx", "cont")
+            for root, _, fns in os.walk(os.path.join(path, sub))
+            for fn in fns
+            if fn.endswith(".parquet")
+        ]
+        disk = sum(os.path.getsize(f) for f in files)
+        footer = 0
+        for f in files:
+            md = pq.read_metadata(f)
+            footer += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+        assert meta["_lm_bytes"] == footer > 2 * disk
+
+        def broadcasts(limit: int) -> bool:
+            monkeypatch.setenv("FDP_KN_BROADCAST_MAX_BYTES", str(limit))
+            scored = kn_score_against(ref, bi, ctx, cont, meta)
+            return "strategy=broadcast" in scored._jdf.queryExecution().analyzed().toString()
+
+        assert not broadcasts((disk + footer) // 2)
+        assert broadcasts(footer)
+
     def test_empty_reference_raises(self, spark, tmp_path):
         from frappe_data_pipelines_spark.operators.selection import kn_write
 

@@ -190,3 +190,39 @@ def test_score_bit_equal_on_every_embedding_row(spark, sf_dir):
     for q in (stored, HashingEmbedder().embed(["fast join table scan"])[0]):
         old = _by_id(emb.withColumn("score", _unfolded_score(F.col("embedding"), _array_of_lits(q))))
         assert _by_id(_score(emb, q, "embedding")) == old
+
+
+def test_ivf_probe_bit_equal_to_unfolded_cosine(edge_df):
+    from frappe_data_pipelines_spark.operators.ann import ivf_search
+
+    assigned = edge_df.withColumn("cluster", F.lit(0))
+    for q in EDGE_QUERIES:
+        new = ivf_search(assigned, [[0.0] * len(q)], q, k=100, n_probe=1, vec_col="v")
+        old = _by_id(assigned.withColumn("score", _unfolded_score(F.col("v"), _array_of_lits(q))))
+        assert _by_id(new) == old, q
+
+
+def test_ann_rescore_sites_bit_equal_to_unfolded_cosine(spark, sf_dir):
+    """The IVF probe, the PQ and BQ shortlist re-ranks and the filtered
+    post-filter branch score like the unfolded cosine, row for row."""
+    from frappe_data_pipelines_spark.operators import ann
+    from frappe_data_pipelines_spark.operators.embed import HashingEmbedder
+    from frappe_data_pipelines_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    assigned, centroids = ann.ivf_build(emb, n_clusters=4, n_iter=2)
+    books = ann.pq_train(emb, m_subvectors=8, k_centroids=16, n_iter=2)
+    codes = spark.createDataFrame(ann.pq_encode(emb, books).collect())
+    stored = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
+    for q in (stored, HashingEmbedder().embed(["fast join table scan"])[0]):
+        old = _by_id(emb.withColumn("score", _unfolded_score(F.col("embedding"), _array_of_lits(q))))
+        sites = {
+            "ivf": ann.ivf_search(assigned, centroids, q, k=30, n_probe=2),
+            "pq": ann.pq_search_rerank(codes, emb, books, q, k=30, rerank_depth=60),
+            "post": ann.filtered_ann_search(emb, q, F.col("vec_id") % 2 == 0, k=10,
+                                            overfetch=4, force="post"),
+            "bq": ann.bq_search(emb, q, k=30, overfetch=2),
+        }
+        for name, hits in sites.items():
+            got = _by_id(hits)
+            assert got and got == {i: old[i] for i in got}, name
