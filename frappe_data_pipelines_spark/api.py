@@ -10,9 +10,9 @@ Reference parity:
   * ``PipelineEngine.backfill/retry/retention/ingest_batch`` ↔ the
     whitelisted + scheduled tasks (§3.3)
 
-Every method returns a DataFrame (lazy plan) — callers compose further or
-collect; nothing here materializes driver-side except the single query
-vector lookup.
+Every method returns a DataFrame — callers compose further or collect.
+Dense methods return lazy plans; ``hybrid_search`` collects its two
+bounded candidate pools and returns the fused rows as a local relation.
 """
 
 from __future__ import annotations
@@ -21,17 +21,21 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from frappe_data_pipelines_spark.operators.embed import HashingEmbedder
 from frappe_data_pipelines_spark.operators.search import (
-    bm25_scores,
+    RRF_OVERFETCH,
+    BM25Stats,
     equality_filter,
     filtered_knn,
     find_similar,
     knn_topk,
     lexical_rerank,
-    rrf_fuse,
+    rrf_fuse_local,
 )
+from frappe_data_pipelines_spark.session import local_frame
+from frappe_data_pipelines_spark.sources.tables import input_files_stat_key
 
 RERANK_OVERFETCH = 5  # reference: top_k × 5 (search_service.py:83)
 
@@ -51,6 +55,8 @@ class SearchService:
     text_col: str = "text"
     embedder: object = field(default_factory=HashingEmbedder)
     reranker: object | None = None  # object with rerank(query, texts) -> scores
+    _bm25: BM25Stats | None = field(default=None, init=False, repr=False, compare=False)
+    _bm25_key: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     def _embed_query(self, query_text: str) -> list[float]:
         return self.embedder.embed([query_text])[0]
@@ -97,18 +103,55 @@ class SearchService:
 
     def hybrid_search(self, query_text: str, top_k: int = 10, rrf_k: int = 60) -> DataFrame:
         """Dense + BM25 fused by Reciprocal Rank Fusion — the declared-but-
-        missing capability, done properly."""
+        missing capability, done properly.
+
+        The rows equal ``rrf_fuse(dense, bm25_scores(corpus,
+        query_text.split()), k=rrf_k, top_k=top_k)``, served as two bounded
+        collects: the dense top ``top_k × 5`` and the sparse top ``top_k ×
+        5``, the latter scored from this service's BM25 statistics
+        (``BM25Stats``: built on the first call, rebuilt when the corpus's
+        files change, freed by ``release_caches()``). The fusion runs here
+        over at most 2·top_k·5 ids and the ``(doc_id, rrf)`` result is a
+        local relation, so collecting it runs no Spark job."""
         if self.corpus is None:
             raise ValueError("hybrid_search needs a corpus DataFrame")
-        qv = self._embed_query(query_text)
-        from frappe_data_pipelines_spark.operators.search import _score
+        pool = top_k * RRF_OVERFETCH
+        dense = knn_topk(self.vectors, self._embed_query(query_text), k=pool,
+                         vec_col=self.vec_col, id_col=self.id_col)
+        dense_ids = [r[0] for r in dense.select(self.id_col).collect()]
+        sparse = self._bm25_stats().top(query_text.split(), pool)
+        rows = rrf_fuse_local(dense_ids, [r[0] for r in sparse], k=rrf_k, top_k=top_k)
+        return local_frame(self.corpus.sparkSession, rows, self._fused_schema())
 
-        dense = _score(self.vectors, qv, self.vec_col).select(
-            F.col(self.id_col).alias("doc_id"), "score"
-        )
-        sparse = bm25_scores(self.corpus, query_text.split(),
-                             id_col="doc_id", text_col=self.text_col)
-        return rrf_fuse(dense, sparse, k=rrf_k, top_k=top_k)
+    def _fused_schema(self) -> T.StructType:
+        """``rrf_fuse``'s output schema; its full outer join widens two
+        different id types."""
+        id_type = self.vectors.schema[self.id_col].dataType
+        if id_type != self.corpus.schema["doc_id"].dataType:
+            id_type = self.vectors.select(F.col(self.id_col).alias("doc_id")).join(
+                self.corpus.select("doc_id"), "doc_id", "full_outer"
+            ).schema["doc_id"].dataType
+        return T.StructType([
+            T.StructField("doc_id", id_type),
+            T.StructField("rrf", T.DoubleType()),
+        ])
+
+    def _bm25_stats(self) -> BM25Stats:
+        """The corpus's BM25 statistics, rebuilt when ``corpus``/``text_col``
+        is reassigned or any of the corpus's input files is rewritten."""
+        key = (id(self.corpus), self.text_col, input_files_stat_key(self.corpus))
+        if self._bm25 is None or self._bm25_key != key:
+            self.release_caches()
+            self._bm25 = BM25Stats.build(self.corpus, text_col=self.text_col)
+            self._bm25_key = key
+        return self._bm25
+
+    def release_caches(self) -> None:
+        """Free the BM25 statistics ``hybrid_search`` keeps; the next hybrid
+        request rebuilds them."""
+        if self._bm25 is not None:
+            self._bm25.release()
+        self._bm25 = self._bm25_key = None
 
 
 @dataclass

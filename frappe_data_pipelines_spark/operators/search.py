@@ -14,6 +14,9 @@ Maps the reference's query surface (SURVEY §2 search API table):
     doc-frequency aggregates
   * ``rrf_fuse``            — the declared-but-missing Reciprocal Rank Fusion:
     score = Σ 1/(k + rank) over the dense and sparse rankings
+  * ``BM25Stats`` / ``rrf_fuse_local`` — the serving form of the two:
+    corpus statistics built once per service, a bounded sparse top-n per
+    query, and the fusion over the two collected pools on the driver
   * ``lexical_rerank``      — deterministic stand-in for the Cohere reranker
     (J4, services/search_service.py:239-316): token-overlap scoring with the
     same overfetch×5-then-cut shape.
@@ -31,15 +34,20 @@ Catalyst pushes them into the scan.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from frappe_data_pipelines_spark.functions.vectors import dot_product, vector_norm
+from frappe_data_pipelines_spark.session import local_frame
 
 RRF_K = 60
+RRF_OVERFETCH = 5  # each side's candidate pool: top_k × 5
 BM25_K1 = 1.2
 BM25_B = 0.75
 
@@ -130,6 +138,21 @@ def find_similar(
 # BM25 + RRF (the declared-but-unimplemented hybrid search, done properly)
 # ---------------------------------------------------------------------------
 
+def _tokens(text: Column) -> Column:
+    """BM25's tokenizer: lowercase, split on non-alphanumerics, drop empties."""
+    return F.filter(F.split(F.lower(text), "[^a-z0-9]+"), lambda t: t != "")
+
+
+def _bm25_idf(n_docs: Column, df: Column) -> Column:
+    return F.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+
+
+def _bm25_term(idf: Column, tf: Column, dl: Column, avgdl: Column, k1: float, b: float) -> Column:
+    """One term's Okapi BM25 contribution (one expression tree for every
+    caller, so the scores stay bit-identical)."""
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
 def bm25_scores(
     docs: DataFrame,
     query_terms: list[str],
@@ -162,9 +185,8 @@ def bm25_scores(
     construction anyway (the scan arrives partitioned).
     """
     terms = [t.lower() for t in query_terms]
-    toks_arr = F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != "")
     base = docs.select(
-        F.col(id_col).alias("doc_id"), toks_arr.alias("toks")
+        F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("toks")
     )
     stats = base.agg(
         F.count("*").alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
@@ -179,14 +201,10 @@ def bm25_scores(
     scored = (
         tf.join(F.broadcast(df_), "term")
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf", F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        )
+        .withColumn("idf", _bm25_idf(F.col("n_docs"), F.col("df")))
         .withColumn(
             "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+            _bm25_term(F.col("idf"), F.col("tf"), F.col("dl"), F.col("avgdl"), k1, b),
         )
         .groupBy("doc_id")
         .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
@@ -202,7 +220,7 @@ def rrf_fuse(
     score_b: str = "bm25",
     k: int = RRF_K,
     top_k: int = 10,
-    overfetch: int | None = 5,
+    overfetch: int | None = RRF_OVERFETCH,
 ) -> DataFrame:
     """Reciprocal Rank Fusion: rrf = Σ_r 1/(k + rank_r). Full outer join so a
     doc ranked by only one side still scores.
@@ -273,6 +291,155 @@ def rrf_fuse(
     return fused
 
 
+@dataclass
+class BM25Stats:
+    """``bm25_scores``' corpus statistics, built once and reused by every
+    query (the per-session state of incremental top-k search, EDBT 2020).
+
+    * ``docs``: the cached ``(doc_id, dl, toks)`` projection of the corpus,
+      in the partitioning of its scan; a query counts its own terms there;
+    * ``n_docs``/``avgdl``: ``bm25_scores``' ``count(*)``/``avg(size(toks))``;
+    * ``idf``: term -> idf for every corpus term, computed by Spark with
+      ``bm25_scores``' own expression (df = distinct doc ids per term);
+    * ``unique_ids``: whether each non-null ``doc_id`` names one row (and at
+      most one row has a null id). ``bm25_scores`` sums a repeated id's rows
+      into one score; ``top`` hands such corpora to ``bm25_scores`` itself.
+
+    The build is one aggregation with one shuffle, keyed on term: the df
+    table, with one null-term row per document carrying the corpus
+    totals, collected to the driver with the vocabulary's idf. At
+    100 TB the same table, written as postings partitioned by term, lets a
+    query read only its terms' rows (REPOSE, ICDE 2021)."""
+
+    docs: DataFrame
+    corpus: DataFrame
+    id_col: str
+    text_col: str
+    n_docs: int
+    avgdl: float | None
+    idf: dict[str, float]
+    unique_ids: bool
+
+    @classmethod
+    def build(cls, corpus: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> "BM25Stats":
+        docs = corpus.select(
+            F.col(id_col).alias("doc_id"), _tokens(F.col(text_col)).alias("toks")
+        ).select("doc_id", F.size("toks").alias("dl"), "toks").cache()
+        no_terms = F.array().cast("array<string>")
+        per_term = (
+            docs.select(
+                "doc_id", "dl",
+                F.explode(F.concat(
+                    F.array(F.lit(None).cast("string")),
+                    F.coalesce(F.array_distinct("toks"), no_terms),
+                )).alias("term"),
+            )
+            # keyed on term alone, so the distinct count needs no second exchange
+            .repartition("term")
+            .groupBy("term")
+            .agg(
+                F.countDistinct("doc_id").alias("df"),
+                F.count("*").alias("rows"),
+                F.count("doc_id").alias("ids"),
+                F.avg(F.when(F.col("term").isNull(), F.col("dl"))).alias("avgdl"),
+            )
+            .collect()
+        )
+        totals = next((r for r in per_term if r["term"] is None), None)
+        n_docs = totals["rows"] if totals else 0
+        df_table = local_frame(
+            corpus.sparkSession,
+            [(r["term"], r["df"]) for r in per_term if r["term"] is not None],
+            T.StructType([T.StructField("term", T.StringType()), T.StructField("df", T.LongType())]),
+        )
+        # a projection of a local relation is evaluated while planning: no job
+        idf = df_table.select(
+            "term", _bm25_idf(F.lit(n_docs).cast("long"), F.col("df")).alias("idf")
+        ).collect()
+        return cls(
+            docs=docs, corpus=corpus, id_col=id_col, text_col=text_col,
+            n_docs=n_docs, avgdl=totals["avgdl"] if totals else None,
+            idf={r["term"]: r["idf"] for r in idf},
+            unique_ids=totals is None
+            or (totals["ids"] == totals["df"] and n_docs - totals["ids"] <= 1),
+        )
+
+    def release(self) -> None:
+        self.docs.unpersist()
+
+    def top(self, query_terms: list[str], n: int, k1: float = BM25_K1, b: float = BM25_B) -> list:
+        """``bm25_scores(corpus, query_terms)``'s top ``n`` ``(doc_id, bm25)``
+        rows by (bm25 DESC, doc_id ASC), in one bounded collect. A query
+        with no corpus term runs no job.
+
+        The terms and their idf values are array literals and the scoring
+        runs inside higher-order functions, so the generated code of the
+        scan is the same for every query and compiles once. A document's
+        terms are summed in sorted term order; ``bm25_scores`` sums them in
+        hash-aggregate order, which is the same sum after its 6-decimal
+        round on the corpora the tests check."""
+        if not self.unique_ids:
+            return bm25_scores(self.corpus, query_terms, id_col=self.id_col,
+                               text_col=self.text_col, k1=k1, b=b) \
+                .orderBy(F.desc("bm25"), F.col("doc_id").asc()).limit(n).collect()
+        terms = sorted({t.lower() for t in query_terms} & self.idf.keys())
+        if not terms or n <= 0:
+            return []
+        qt = F.lit(terms)
+        qidf = F.lit(np.array([self.idf[t] for t in terms], dtype=np.float64))
+        avgdl = F.lit(self.avgdl)
+        dl = F.col("dl")
+        # tf = dl - |toks without t|: array_remove is one native pass, no lambda
+        tfs = F.transform(qt, lambda t: dl - F.size(F.array_remove("toks", t)))
+        score = F.aggregate(
+            F.zip_with(qidf, tfs, lambda w, tf: _bm25_term(w, tf, dl, avgdl, k1, b)),
+            F.lit(0.0), lambda acc, x: acc + x,
+        )
+        return (
+            self.docs.filter(F.arrays_overlap("toks", qt))
+            .select("doc_id", F.round(score, 6).alias("bm25"))
+            .orderBy(F.desc("bm25"), F.col("doc_id").asc())
+            .limit(n)
+            .collect()
+        )
+
+
+def round_half_up(x: float, digits: int) -> float:
+    """Spark's ``round(double, digits)``: HALF_UP on the decimal string of
+    ``x`` (``BigDecimal.valueOf``), not on its binary value."""
+    if math.isnan(x) or math.isinf(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
+
+
+def rrf_score(rank_a: int | None, rank_b: int | None, k: int = RRF_K) -> float:
+    """``rrf_fuse``'s ``round(coalesce(1/(k+rank_a), 0) + coalesce(1/(k+rank_b),
+    0), 6)`` for one pair of ranks (None: unranked on that side)."""
+    def part(rank):
+        return 0.0 if rank is None else 1.0 / (k + rank)
+
+    return round_half_up(part(rank_a) + part(rank_b), 6)
+
+
+def rrf_fuse_local(ids_a: list, ids_b: list, k: int = RRF_K, top_k: int = 10) -> list[tuple]:
+    """``rrf_fuse`` over two driver-side rankings (ids in rank order, each
+    already cut to its pool): the same full outer join on the id (a null id
+    matches nothing; a repeated id pairs every rank on one side with every
+    rank on the other), ``round(1/(k+rank_a) + 1/(k+rank_b), 6)``, and top
+    ``top_k`` by (rrf DESC, doc_id ASC, nulls first). Returns
+    ``(doc_id, rrf)`` tuples."""
+    ranks_b: dict = {}
+    for r, d in enumerate(ids_b, 1):
+        ranks_b.setdefault(d, []).append(r)
+    ranks_b.pop(None, None)
+    pairs = [(d, ra, rb) for ra, d in enumerate(ids_a, 1) for rb in ranks_b.get(d, [None])]
+    in_a = set(ids_a) - {None}
+    pairs += [(d, None, rb) for rb, d in enumerate(ids_b, 1) if d not in in_a]
+    fused = [(d, rrf_score(ra, rb, k)) for d, ra, rb in pairs]
+    fused.sort(key=lambda t: (-t[1], t[0] is not None, t[0]))
+    return fused[:top_k]
+
+
 def lexical_rerank(
     candidates: DataFrame,
     query_terms: list[str],
@@ -311,8 +478,8 @@ def rerank_with_provider(
 
     The candidate set is an overfetched top-k (small — reference top_k×5),
     so the provider call happens driver-side on collected rows, exactly like
-    the reference's HTTP rerank; the result is returned as a DataFrame for
-    further composition."""
+    the reference's HTTP rerank; the result is returned as a local-relation
+    DataFrame for further composition (collecting it runs no job)."""
     from .guards import MAX_RERANK_CANDIDATES, collect_bounded
 
     rows = collect_bounded(
@@ -320,7 +487,6 @@ def rerank_with_provider(
         MAX_RERANK_CANDIDATES,
         "rerank candidates",
     )
-    sess = candidates.sparkSession
     try:
         scores = provider.rerank(query_text, [r[text_col] for r in rows])
         if len(scores) != len(rows):
@@ -328,10 +494,8 @@ def rerank_with_provider(
         ranked = sorted(
             zip(rows, scores), key=lambda t: (-float(t[1]), t[0][id_col])
         )[:top_k]
-        out = [
-            {**r.asDict(), "relevance": round(float(s), 6)} for r, s in ranked
-        ]
+        out = [(*r, round(float(s), 6)) for r, s in ranked]
     except Exception:  # noqa: BLE001 — graceful fallback (reference :305-316)
-        out = [{**r.asDict(), "relevance": None} for r in rows[:top_k]]
-    schema = candidates.schema.add("relevance", "double")
-    return sess.createDataFrame(out, schema)
+        out = [(*r, None) for r in rows[:top_k]]
+    schema = T.StructType([*candidates.schema.fields, T.StructField("relevance", T.DoubleType())])
+    return local_frame(candidates.sparkSession, out, schema)

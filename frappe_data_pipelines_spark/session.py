@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 def jvm_has_deep_stack(spark: SparkSession, min_bytes: int = 8 << 20) -> bool:
@@ -46,6 +47,26 @@ def _with_stack_size(opts: str, xss: str = "-Xss32m") -> str:
     if "-Xss" in opts:
         return opts
     return f"{opts} {xss}".strip()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    planned as a local relation through Arrow: collecting it, or a
+    projection of it, runs no Spark job, and writing it runs no Python
+    task. ``createDataFrame(list)`` plans an RDD instead, whose tasks
+    unpickle the rows in a Python worker. A naive datetime is read in the
+    driver's system time zone, as ``createDataFrame(list)`` reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, arrow_field, col in zip(schema.fields, arrow, cols):
+        if isinstance(field.dataType, TimestampType):
+            col = [v.astimezone() if v is not None and v.tzinfo is None else v for v in col]
+        arrays.append(pa.array(col, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 DRIVER_MEMORY_CAP_MB = 16 << 10

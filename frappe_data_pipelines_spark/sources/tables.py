@@ -92,9 +92,6 @@ def source_stat_key(sf_dir: str, *names: str) -> str:
     size and mtime. A missing file contributes a constant, so probing a
     not-yet-generated layout still yields a stable key."""
 
-    def stamp(st: os.stat_result) -> str:
-        return f"{st.st_size}:{st.st_mtime_ns}:{st.st_ino}:{st.st_ctime_ns}"
-
     parts = []
     for n in names:
         p = os.path.join(sf_dir, f"{n}.parquet")
@@ -102,14 +99,38 @@ def source_stat_key(sf_dir: str, *names: str) -> str:
             files = sorted(
                 os.path.join(root, fn) for root, _, fns in os.walk(p) for fn in fns
             )
-            stamps = [f"{os.path.relpath(f, p)}@{stamp(os.stat(f))}" for f in files]
+            stamps = [f"{os.path.relpath(f, p)}@{_stamp(f)}" for f in files]
             parts.append(f"{n}=[{';'.join(stamps)}]")
             continue
         try:
-            parts.append(f"{n}={stamp(os.stat(p))}")
+            parts.append(f"{n}={_stamp(p)}")
         except OSError:
             parts.append(f"{n}=absent")
     return ",".join(parts)
+
+
+def _stamp(path: str) -> str:
+    st = os.stat(path)
+    return f"{st.st_size}:{st.st_mtime_ns}:{st.st_ino}:{st.st_ctime_ns}"
+
+
+def input_files_stat_key(df: DataFrame) -> str:
+    """``source_stat_key`` for whatever files ``df`` scans
+    (``df.inputFiles()``): each local file's stamp, so a file rewritten in
+    place, renamed over, or copied over with ``shutil.copy2`` changes the
+    key. A file the driver cannot stat (a remote URI, a vanished file)
+    contributes its name alone; a DataFrame that scans no file gives ''."""
+    from urllib.parse import unquote, urlparse
+
+    parts = []
+    for uri in sorted(df.inputFiles()):
+        u = urlparse(uri)
+        try:
+            stamp = _stamp(unquote(u.path)) if u.scheme in ("", "file") else "remote"
+        except OSError:
+            stamp = "absent"
+        parts.append(f"{uri}@{stamp}")
+    return ";".join(parts)
 
 
 def spread_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:

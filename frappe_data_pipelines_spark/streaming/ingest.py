@@ -35,8 +35,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from frappe_data_pipelines_spark.operators.chunker import chunk_embed_documents
+from frappe_data_pipelines_spark.session import local_frame
 
 DOC_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
@@ -44,6 +46,9 @@ DOC_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BI
 # chunk rows own everything else
 _JOBS_COLS = ["source_doc_id", "status", "batch_id", "created_at", "error_message"]
 _METRICS_COLS = ["batch_id", "n_docs"]
+_METRICS_SCHEMA = T.StructType(
+    [T.StructField("batch_id", T.LongType()), T.StructField("n_docs", T.LongType())]
+)
 
 # distributed-door batches between driver-GC nudges (localCheckpoint block
 # release rides driver GC + ContextCleaner — see the slow-path comment)
@@ -146,7 +151,10 @@ def start_ingest_stream(
     through to the other guards rather than failing blind. Because the
     score is a dictionary JOIN (not a row-local kernel), enabling this
     door routes every batch through the distributed path — the trickle
-    fast path's job budget has no room for a join stage.
+    fast path's job budget has no room for a join stage. Below the
+    ``FDP_KN_BROADCAST_MAX_BYTES`` gate the dictionaries are broadcast,
+    and since each micro-batch plans its own query, every batch
+    broadcasts them again: a streaming consumer pays that per batch.
 
     ``local_door_max_rows`` / ``local_door_max_chars``: micro-batches at
     or under BOTH bounds take the TRICKLE FAST PATH — the batch is
@@ -252,8 +260,6 @@ def start_ingest_stream(
         unioned.write.partitionBy("sink").mode("append").parquet(records_dir)
 
     def _jobs_df(spark_sess, rows: list[tuple]) -> DataFrame:
-        from pyspark.sql import types as T
-
         nonlocal jobs_schema
         if jobs_schema is None:
             jobs_schema = T.StructType([
@@ -263,14 +269,9 @@ def start_ingest_stream(
                 T.StructField("created_at", T.TimestampType()),
                 T.StructField("error_message", T.StringType()),
             ])
-        # explicit numSlices=1 (NOT createDataFrame().coalesce(1)): the
-        # plain createDataFrame parallelizes into defaultParallelism
-        # pickled slices, and a coalesce(1) then makes ONE task evaluate
-        # all 32 parents SEQUENTIALLY — each a python-stage round trip,
-        # ~5s of pure handshake per unified write (measured)
-        return spark_sess.createDataFrame(
-            spark_sess.sparkContext.parallelize(rows, 1), jobs_schema
-        )
+        # a local relation: the write converts the rows in the JVM, with no
+        # Python task; one partition keeps one job-row file per batch
+        return local_frame(spark_sess, rows, jobs_schema).coalesce(1)
 
     def _chunk_sink_parts(
         spark_sess, embedded: DataFrame, batch_id: int
@@ -370,19 +371,9 @@ def start_ingest_stream(
         def is_bad(rd) -> bool:
             return rd["__bl"] is not None or not (rd["text"] or "").strip(" ")
 
-        # stamp in the SESSION timezone, not the driver system tz: the
-        # distributed path's F.current_timestamp() renders in
-        # spark.sql.session.timeZone, and createDataFrame interprets naive
-        # datetimes in the same zone — using datetime.now() here would skew
-        # created_at between the two door paths whenever they differ
-        # (ADVICE r10)
-        try:
-            from zoneinfo import ZoneInfo
-
-            _tz = ZoneInfo(spark_sess.conf.get("spark.sql.session.timeZone"))
-            now = _dt.datetime.now(_tz).replace(tzinfo=None)
-        except Exception:  # noqa: BLE001 — unknown/unset zone: system tz
-            now = _dt.datetime.now()
+        # an aware instant: the same created_at as the distributed path's
+        # F.current_timestamp() whatever the session and system time zones
+        now = _dt.datetime.now(_dt.timezone.utc)
         queued = [(rd["doc_id"], "Queued", batch_id, now, None) for rd in rdicts]
         failed = [
             (
@@ -435,12 +426,7 @@ def start_ingest_stream(
         parts.append(("jobs", _jobs_df(spark_sess, queued + done + failed)))
         parts.append((
             "metrics",
-            spark_sess.createDataFrame(
-                spark_sess.sparkContext.parallelize(
-                    [(batch_id, len(rdicts))], 1
-                ),
-                "batch_id LONG, n_docs LONG",
-            ),
+            local_frame(spark_sess, [(batch_id, len(rdicts))], _METRICS_SCHEMA),
         ))
         _write_unified(spark_sess, parts)
         mark("unified write")

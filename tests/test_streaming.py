@@ -854,6 +854,40 @@ def test_local_door_fast_path_matches_distributed(spark, tmp_path):
     assert any(boiler in c for d, _, c in fast["chunks"] if d is None)
 
 
+@pytest.mark.parametrize("zone", ["UTC", "Asia/Kolkata"])
+def test_door_job_rows_stamp_the_batch_instant(spark, tmp_path, zone):
+    """Both door paths stamp created_at with the instant the batch ran,
+    whatever ``spark.sql.session.timeZone`` is: the distributed path with
+    ``current_timestamp()``, the local path with an aware UTC datetime
+    read through its local-relation job rows. The metrics row still
+    counts the batch."""
+    import time
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        for mode, kw in (("local", {}), ("distributed", {"local_door_max_rows": 0})):
+            inp, out = str(tmp_path / f"in_{mode}"), str(tmp_path / f"out_{mode}")
+            spark.createDataFrame(
+                [(1, "first doc text"), (2, "   "), (None, "null id text")],
+                "doc_id long, text string",
+            ).withColumn("lang", F.lit("en")).withColumn("source", F.lit("s")) \
+                .withColumn("n_chars", F.length("text").cast("long")) \
+                .coalesce(1).write.parquet(inp)
+            t0 = time.time()
+            start_ingest_stream(spark, inp, out, str(tmp_path / f"ckpt_{mode}"),
+                                **kw).awaitTermination(120)
+            t1 = time.time()
+            jobs = read_ingest_sink(spark, out, "jobs")
+            stamps = [r[0] / 1e6 for r in jobs.select(F.unix_micros("created_at")).collect()]
+            assert len(stamps) == 6, mode  # 3 Queued, 2 Completed, 1 Failed
+            assert all(t0 - 1 <= t <= t1 + 1 for t in stamps), (mode, t0, t1, stamps)
+            metrics = read_ingest_sink(spark, out, "metrics").collect()
+            assert [(r["batch_id"], r["n_docs"]) for r in metrics] == [(0, 3)], mode
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
 def test_chunker_emits_at_least_one_chunk_per_nonempty_doc(spark):
     """The door's Completed rows are derived from the surviving doc set
     (NOT from chunk counts) — sound only while the recursive chunker
