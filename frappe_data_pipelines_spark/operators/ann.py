@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from frappe_data_pipelines_spark.functions.vectors import dot_product, vector_norm
+from frappe_data_pipelines_spark.operators import kernel
 from frappe_data_pipelines_spark.operators.search import _score
 
 
@@ -391,7 +392,7 @@ def pq_encode(
             codes = _encode_np(X, books)
             yield pd.DataFrame({"id": pdf[id_col], "codes": list(codes.tolist())})
 
-    return vectors.select(id_col, vec_col).mapInPandas(encode, "id long, codes array<int>")
+    return kernel.map_batches(vectors.select(id_col, vec_col), encode, "id long, codes array<int>")
 
 
 def pq_search(
@@ -429,7 +430,7 @@ def pq_search(
             dist = table[cols[None, :], codes].sum(axis=1)
             yield pd.DataFrame({"id": pdf["id"], "adc_dist": np.round(dist, 6)})
 
-    scored = codes_df.mapInPandas(score, "id long, adc_dist double")
+    scored = kernel.map_batches(codes_df, score, "id long, adc_dist double")
     return scored.orderBy(F.col("adc_dist").asc(), F.col("id").asc()).limit(k)
 
 
@@ -636,7 +637,7 @@ def knn_batch(
         if best is not None:
             yield best
 
-    pruned = scored.mapInPandas(_local_topk, schema=scored.schema)
+    pruned = kernel.map_batches(scored, _local_topk, scored.schema)
 
     from pyspark.sql import Window
 
@@ -874,8 +875,8 @@ def hnsw_partition_search(
                 out_d.append(round(dist, 6))
         yield pd.DataFrame({query_id_col: out_q, id_col: out_id, "dist": out_d})
 
-    local_topk = vectors.select(id_col, vec_col).mapInPandas(
-        run, f"{query_id_col} long, {id_col} long, dist double"
+    local_topk = kernel.map_batches(
+        vectors.select(id_col, vec_col), run, f"{query_id_col} long, {id_col} long, dist double"
     )
     from pyspark.sql import Window
 
@@ -971,8 +972,6 @@ def hnsw_write(
     import json as _json
     import os as _os
 
-    import pandas as pd
-
     spark = vectors.sparkSession
 
     def build_shard(key, pdf):
@@ -983,14 +982,15 @@ def hnsw_write(
         index = HNSWIndex(M=M, ef_construction=ef_construction).build(X)
         return _hnsw_shard_rows(int(key[0]), index, pdf["vec_id"].tolist(), raw)
 
-    rows = (
+    rows = kernel.apply_groups(
         vectors.select(
             F.col(id_col).cast("long").alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("embedding"),
         )
         .withColumn("shard", F.pmod(F.col("vec_id"), F.lit(n_shards)).cast("long"))
-        .groupBy("shard")
-        .applyInPandas(build_shard, _HNSW_ROW_SCHEMA)
+        .groupBy("shard"),
+        build_shard,
+        _HNSW_ROW_SCHEMA,
     )
     rows.write.partitionBy("shard").mode("overwrite").parquet(path)
     with open(_os.path.join(path, "_hnsw_meta.json"), "w") as f:
@@ -1058,10 +1058,8 @@ def hnsw_read_search(
             {query_id_col: out_q, "vec_id": out_id, "dist": out_d}
         )
 
-    local_topk = (
-        spark.read.parquet(path)
-        .groupBy("shard")
-        .applyInPandas(search_shard, out_schema)
+    local_topk = kernel.apply_groups(
+        spark.read.parquet(path).groupBy("shard"), search_shard, out_schema
     )
     from pyspark.sql import Window
 
@@ -1108,8 +1106,6 @@ def hnsw_append(
     import json as _json
     import os as _os
 
-    import pandas as pd
-
     with open(_os.path.join(path, "_hnsw_meta.json")) as f:
         meta = _json.load(f)
     n_shards, M, efc = meta["n_shards"], meta["M"], meta["ef_construction"]
@@ -1154,10 +1150,8 @@ def hnsw_append(
     # materialize BEFORE the overwrite: the updated rows' lineage reads the
     # very partitions the write replaces (Spark rejects self-overwrites, and
     # even where it didn't, lazy re-scan mid-delete would corrupt)
-    updated = (
-        resident.unionByName(incoming)
-        .groupBy("shard")
-        .applyInPandas(extend_shard, _HNSW_ROW_SCHEMA)
+    updated = kernel.apply_groups(
+        resident.unionByName(incoming).groupBy("shard"), extend_shard, _HNSW_ROW_SCHEMA
     ).localCheckpoint(eager=True)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -1285,8 +1279,8 @@ def sq_train(
                 {"lo": [m.min(axis=0).tolist()], "hi": [m.max(axis=0).tolist()]}
             )
 
-    parts = vectors.select(vec_col).mapInPandas(
-        reduce_batch, "lo array<double>, hi array<double>"
+    parts = kernel.map_batches(
+        vectors.select(vec_col), reduce_batch, "lo array<double>, hi array<double>"
     ).collect()
     lo = np.minimum.reduce([np.asarray(r["lo"]) for r in parts])
     hi = np.maximum.reduce([np.asarray(r["hi"]) for r in parts])
@@ -1421,7 +1415,7 @@ def sq_search(
             dots = approx @ bq
             yield pd.DataFrame({"id": pdf["id"], "score": np.round(dots, 6)})
 
-    scored = codes_df.mapInPandas(score, "id long, score double")
+    scored = kernel.map_batches(codes_df, score, "id long, score double")
     return scored.orderBy(F.col("score").desc(), F.col("id").asc()).limit(k)
 
 

@@ -24,6 +24,8 @@ from collections import deque
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from frappe_data_pipelines_spark.operators import kernel
+
 
 # Worker-side automaton memo: Spark reuses python workers across tasks and
 # micro-batches (spark.python.worker.reuse, default on), so a streaming door
@@ -185,8 +187,8 @@ def blocklist_hits(
     narrow = spread_scan(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     )
-    return narrow.mapInPandas(
-        run, schema="doc_id long, n_hits long, n_terms long, first_pos long"
+    return kernel.map_batches(
+        narrow, run, "doc_id long, n_hits long, n_terms long, first_pos long"
     )
 
 
@@ -284,7 +286,7 @@ def blocklist_annotate_prepared(
             yield out
 
     schema = T.StructType(docs.schema.fields + [T.StructField(out_col, T.LongType())])
-    return docs.mapInPandas(run, schema=schema)
+    return kernel.map_batches(docs, run, schema)
 
 
 def blocklist_filter(

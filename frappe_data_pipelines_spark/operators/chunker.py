@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from frappe_data_pipelines_spark.operators import kernel
 from frappe_data_pipelines_spark.operators.embed import _resolve_provider
 
 DEFAULT_SEPARATORS = ["\n\n", "\n", ". ", " ", ""]
@@ -433,7 +434,7 @@ def chunk_documents(
         for rows in _chunk_batches(batches, strategy, chunk_size, chunk_overlap):
             yield pd.DataFrame(rows)
 
-    return _chunk_input(docs, id_col, text_col).mapInPandas(run, schema=CHUNK_SCHEMA)
+    return kernel.map_batches(_chunk_input(docs, id_col, text_col), run, CHUNK_SCHEMA)
 
 
 def chunk_embed_documents(
@@ -472,7 +473,7 @@ def chunk_embed_documents(
             rows["embedding"] = prov.embed(texts) if texts else []
             yield pd.DataFrame(rows)
 
-    return _chunk_input(docs, "doc_id", "text").mapInPandas(run, schema=schema)
+    return kernel.map_batches(_chunk_input(docs, "doc_id", "text"), run, schema)
 
 
 def register_chunk_udtf(spark, name: str = "chunk_split") -> None:

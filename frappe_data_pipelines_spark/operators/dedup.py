@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from frappe_data_pipelines_spark.functions.text import fingerprint_expr
 from frappe_data_pipelines_spark.functions.vectors import cosine_similarity
+from frappe_data_pipelines_spark.operators import kernel
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -314,29 +315,6 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return sig
 
 
-def _gemm_pair_blocks(batches, build, thr: float):
-    """``embedding_neardup_pairs``' kernel, at module level so that
-    unpickling it imports the package (and so installs ``lazyzip`` in the
-    worker): one GEMM of each Arrow batch against the broadcast build side."""
-    import numpy as np
-    import pandas as pd
-
-    ids_full, mat_full, nrm_full = build
-    for pa in batches:
-        if len(pa) == 0:
-            continue
-        mat_a = np.stack(pa["v"].to_numpy()).astype(np.float64)
-        ids_a = pa["id"].to_numpy()
-        with np.errstate(divide="ignore", invalid="ignore"):
-            nrm_a = np.sqrt((mat_a * mat_a).sum(axis=1))
-            sims = np.round((mat_a @ mat_full.T) / np.outer(nrm_a, nrm_full), 6)
-            ia, jb = np.nonzero(sims >= thr)  # NaN (zero norm) never passes
-        keep = ids_a[ia] < ids_full[jb]
-        yield pd.DataFrame(
-            {"id_a": ids_a[ia][keep], "id_b": ids_full[jb][keep], "cos": sims[ia, jb][keep]}
-        )
-
-
 def embedding_neardup_pairs(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -386,10 +364,25 @@ def embedding_neardup_pairs(
     thr = float(threshold)
 
     def block(batches):
-        return _gemm_pair_blocks(batches, bcast.value, thr)
+        import pandas as pd
+
+        ids_full, mat_full, nrm_full = bcast.value
+        for pa in batches:
+            if len(pa) == 0:
+                continue
+            mat_a = np.stack(pa["v"].to_numpy()).astype(np.float64)
+            ids_a = pa["id"].to_numpy()
+            with np.errstate(divide="ignore", invalid="ignore"):
+                nrm_a = np.sqrt((mat_a * mat_a).sum(axis=1))
+                sims = np.round((mat_a @ mat_full.T) / np.outer(nrm_a, nrm_full), 6)
+                ia, jb = np.nonzero(sims >= thr)  # NaN (zero norm) never passes
+            keep = ids_a[ia] < ids_full[jb]
+            yield pd.DataFrame(
+                {"id_a": ids_a[ia][keep], "id_b": ids_full[jb][keep], "cos": sims[ia, jb][keep]}
+            )
 
     par = sess.sparkContext.defaultParallelism
-    return base.repartition(par).mapInPandas(block, schema)
+    return kernel.map_batches(base.repartition(par), block, schema)
 
 
 def ngram_jaccard_pairs_prefix(
@@ -1095,7 +1088,7 @@ def winnow_fingerprints_fast(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
         .repartition(par)  # small-file sources arrive as 1 input partition
     )
-    return narrow.mapInPandas(run, schema=schema)
+    return kernel.map_batches(narrow, run, schema)
 
 
 def exact_dup_spans(
@@ -1568,7 +1561,7 @@ def incremental_scrub_local(
         # per-task dedup above bounds the collect by (tasks x batch
         # windows); the global dedup is a driver-side set union
         marked: dict = {}
-        for r in corpus_doc_fp.mapInPandas(probe, schema=schema).collect():
+        for r in kernel.map_batches(corpus_doc_fp, probe, schema).collect():
             marked.setdefault(r["doc_id"], set()).add(r["pos"])
     finally:
         bc.unpersist(blocking=False)
@@ -1935,12 +1928,7 @@ def longest_intra_doc_repeat(
     a pure map stage, embarrassingly parallel at any corpus size. Docs
     with zero tokens are dropped (no sequence → no metric).
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     from frappe_data_pipelines_spark.functions.text import tokens_expr
-
     from frappe_data_pipelines_spark.sources.tables import spread_scan
 
     # spread the RAW rows before tokenizing (a small one-file corpus scans
@@ -1948,30 +1936,22 @@ def longest_intra_doc_repeat(
     # run on a single core), and drop zero-token docs INSIDE the kernel:
     # a .where(size(toks) >= 1) is pushed into the scan with the tokenize
     # subtree substituted — a duplicate, serialized tokenize pass (r12
-    # plan audit). mapInPandas may change cardinality, so the kernel-side
+    # plan audit). A Python pass may change cardinality, so the kernel-side
     # drop is exactly equivalent.
     base = spread_scan(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     ).select("doc_id", tokens_expr(F.col("text")).alias("toks"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # null-safe (ADVICE r12): tokens_expr(null text) yields a null
-            # array which arrives here as None — len(None) would kill the
-            # scan; the pre-r12 .where(size(toks) >= 1) dropped such rows
-            # silently and the kernel-side drop must keep that totality
-            keep = pdf["toks"].map(lambda t: 0 if t is None else len(t)) > 0
-            sub = pdf[keep]
-            yield pd.DataFrame(
-                {
-                    "doc_id": sub["doc_id"],
-                    "max_repeat_tokens": [
-                        _sam_longest_repeat(list(t)) for t in sub["toks"]
-                    ],
-                }
-            )
+    def row(doc_id, toks):
+        # null-safe (ADVICE r12): tokens_expr(null text) yields a null
+        # array which arrives here as None — len(None) would kill the
+        # scan; the pre-r12 .where(size(toks) >= 1) dropped such rows
+        # silently and the kernel-side drop must keep that totality
+        if toks is None or len(toks) == 0:
+            return []
+        return [(doc_id, _sam_longest_repeat(list(toks)))]
 
-    return base.mapInPandas(run, "doc_id long, max_repeat_tokens long")
+    return kernel.map_rows(base, row, "doc_id long, max_repeat_tokens long")
 
 
 def soft_dedup_weights(

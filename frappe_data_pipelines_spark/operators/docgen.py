@@ -15,12 +15,13 @@ from __future__ import annotations
 import io
 import zipfile
 import zlib
-from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators import kernel
 
 
 def synth_pdf(text: str) -> bytes:
@@ -111,24 +112,15 @@ def documents_as_files(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     ).repartition(docs.sparkSession.sparkContext.defaultParallelism)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, text):
+        if doc_id % 2 == 0:
+            return [(f"/gen/doc_{doc_id}.pdf", synth_pdf(text or ""))]
+        return [(f"/gen/doc_{doc_id}.docx", synth_docx(text or ""))]
 
-        for pdf in batches:
-            paths, contents = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                text = text or ""
-                if doc_id % 2 == 0:
-                    paths.append(f"/gen/doc_{doc_id}.pdf")
-                    contents.append(synth_pdf(text))
-                else:
-                    paths.append(f"/gen/doc_{doc_id}.docx")
-                    contents.append(synth_docx(text))
-            yield pd.DataFrame({"path": paths, "content": contents})
-
-    return narrow.mapInPandas(
-        run,
-        schema=T.StructType(
+    return kernel.map_rows(
+        narrow,
+        row,
+        T.StructType(
             [
                 T.StructField("path", T.StringType()),
                 T.StructField("content", T.BinaryType()),
@@ -194,21 +186,13 @@ def documents_as_html(docs: DataFrame, id_col: str = "doc_id",
     # _knn_edges) — round-robin, no key skew possible
     narrow = narrow.repartition(docs.sparkSession.sparkContext.defaultParallelism)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(i, t, c, n):
+        return [(i, synth_html(int(i), t or "", int(c), int(n)))]
 
-        for pdf in batches:
-            html = [
-                synth_html(int(i), t or "", int(c), int(n))
-                for i, t, c, n in zip(
-                    pdf["doc_id"], pdf["text"], pdf["n_chars"], pdf["n_docs"]
-                )
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "html": html})
-
-    return narrow.mapInPandas(
-        run,
-        schema=T.StructType(
+    return kernel.map_rows(
+        narrow,
+        row,
+        T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
                 T.StructField("html", T.StringType()),
@@ -241,7 +225,7 @@ def documents_as_warc(docs: DataFrame, n_files: int | None = None,
         .withColumn("part", F.pmod(F.col("doc_id"), F.lit(n_files)))
     )
 
-    def build(pdf):
+    def build(_key, pdf):
         import pandas as pd
 
         pdf = pdf.sort_values("doc_id")
@@ -268,6 +252,4 @@ def documents_as_warc(docs: DataFrame, n_files: int | None = None,
             {"path": [f"/warc/part-{part:05d}.warc.gz"], "content": [write_warc(records)]}
         )
 
-    return narrow.groupBy("part").applyInPandas(
-        build, schema="path string, content binary"
-    )
+    return kernel.apply_groups(narrow.groupBy("part"), build, "path string, content binary")

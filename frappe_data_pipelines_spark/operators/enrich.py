@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from frappe_data_pipelines_spark.operators import kernel
+
 
 class TemplateContextProvider:
     """Deterministic J2 substitute: context = positional template over the
@@ -149,7 +151,7 @@ def _enrich_with_provider(chunks: DataFrame, provider) -> DataFrame:
             pdf["enrich_error"] = pd.Series(errs, index=pdf.index, dtype=object)
             yield pdf
 
-    return chunks.mapInPandas(run, out_schema)
+    return kernel.map_batches(chunks, run, out_schema)
 
 
 def processing_plan_expr(

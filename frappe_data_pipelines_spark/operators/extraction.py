@@ -17,11 +17,11 @@ latin-1 → cp1252 → ignore-errors).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators import kernel
 
 # the reference's full dispatch map (text_extraction.py:13-27): text formats
 # plus every image extension it routes to the vision/OCR branch
@@ -264,58 +264,46 @@ def extract_text(
         extension_of(F.col(path_col)).alias("ext"),
     ).filter(F.col("ext").isin(enabled))
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(path, content, ext):
+        payload = bytes(content) if content is not None else b""
+        conf = 1.0
+        if ext in ("txt", "md"):
+            text, method = decode_text_with_fallback(payload)
+        elif ext == "pdf":
+            text, method = _stub_pdf(payload), "pdf-stub"
+            if real_kernels:
+                try:
+                    text, method = pdf_extract_text(payload), "pdf-mini"
+                except Exception:  # noqa: BLE001 — no embedded text
+                    # A10/A11: textless PDF → try the scanned path
+                    # (page images → OCR) before giving up
+                    try:
+                        text, conf = pdf_ocr_scanned(payload)
+                        method = "pdf-ocr"
+                    except Exception:  # noqa: BLE001 — per-row fallback
+                        pass
+        elif ext == "docx":
+            text, method = _stub_docx(payload), "docx-stub"
+            if real_kernels:
+                try:
+                    text, method = docx_extract_text(payload), "docx-xml"
+                except Exception:  # noqa: BLE001
+                    pass
+        else:  # images → OCR (vision branch would append J3 output)
+            text, conf = _stub_ocr(payload)
+            method = "ocr-stub"
+            if real_kernels:
+                try:
+                    from frappe_data_pipelines_spark.operators.imaging import ocr_bitmap
 
-        for pdf in batches:
-            out = {k: [] for k in ("path", "ext", "text", "method", "confidence")}
-            for path, content, ext in zip(pdf["path"], pdf["content"], pdf["ext"]):
-                payload = bytes(content) if content is not None else b""
-                conf = 1.0
-                if ext in ("txt", "md"):
-                    text, method = decode_text_with_fallback(payload)
-                elif ext == "pdf":
-                    text, method = _stub_pdf(payload), "pdf-stub"
-                    if real_kernels:
-                        try:
-                            text, method = pdf_extract_text(payload), "pdf-mini"
-                        except Exception:  # noqa: BLE001 — no embedded text
-                            # A10/A11: textless PDF → try the scanned path
-                            # (page images → OCR) before giving up
-                            try:
-                                text, conf = pdf_ocr_scanned(payload)
-                                method = "pdf-ocr"
-                            except Exception:  # noqa: BLE001 — per-row fallback
-                                pass
-                elif ext == "docx":
-                    text, method = _stub_docx(payload), "docx-stub"
-                    if real_kernels:
-                        try:
-                            text, method = docx_extract_text(payload), "docx-xml"
-                        except Exception:  # noqa: BLE001
-                            pass
-                else:  # images → OCR (vision branch would append J3 output)
-                    text, conf = _stub_ocr(payload)
-                    method = "ocr-stub"
-                    if real_kernels:
-                        try:
-                            from frappe_data_pipelines_spark.operators.imaging import (
-                                ocr_bitmap,
-                            )
+                    res = ocr_bitmap(payload)
+                    text, conf = res["text"], res["confidence"]
+                    method = "ocr-bitmap"
+                except Exception:  # noqa: BLE001 — non-fixture image
+                    pass
+        return [(path, ext, text, method, conf)]
 
-                            res = ocr_bitmap(payload)
-                            text, conf = res["text"], res["confidence"]
-                            method = "ocr-bitmap"
-                        except Exception:  # noqa: BLE001 — non-fixture image
-                            pass
-                out["path"].append(path)
-                out["ext"].append(ext)
-                out["text"].append(text)
-                out["method"].append(method)
-                out["confidence"].append(conf)
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(run, schema=EXTRACT_SCHEMA)
+    return kernel.map_rows(narrow, row, EXTRACT_SCHEMA)
 
 
 OCR_RESULT_SCHEMA = T.StructType(
@@ -354,32 +342,19 @@ def ocr_images(
         F.col(path_col).alias("path"), F.col(content_col).alias("content")
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
+    def row(path, content):
         from frappe_data_pipelines_spark.operators.imaging import ocr_bitmap
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                payload = bytes(content) if content is not None else b""
-                try:
-                    r = ocr_bitmap(payload)
-                    rows.append(
-                        (path, r["text"], r["confidence"], r["detected_languages"],
-                         [(b["bbox"], b["text"], b["confidence"])
-                          for b in r["bounding_boxes"]])
-                    )
-                except Exception:  # noqa: BLE001 — A9 fallback branch
-                    text, conf = _stub_ocr(payload)
-                    rows.append((path, text, conf, ["unknown"], []))
-            yield pd.DataFrame(
-                rows,
-                columns=["path", "text", "confidence", "detected_languages",
-                         "bounding_boxes"],
-            )
+        payload = bytes(content) if content is not None else b""
+        try:
+            r = ocr_bitmap(payload)
+            return [(path, r["text"], r["confidence"], r["detected_languages"],
+                     [(b["bbox"], b["text"], b["confidence"]) for b in r["bounding_boxes"]])]
+        except Exception:  # noqa: BLE001 — A9 fallback branch
+            text, conf = _stub_ocr(payload)
+            return [(path, text, conf, ["unknown"], [])]
 
-    return narrow.mapInPandas(run, schema=OCR_RESULT_SCHEMA)
+    return kernel.map_rows(narrow, row, OCR_RESULT_SCHEMA)
 
 
 def is_scanned_heuristic(text_col, threshold: int = 50) -> F.Column:

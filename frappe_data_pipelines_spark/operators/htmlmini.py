@@ -27,12 +27,13 @@ pages where the density rules — not the semantic tags — do the work.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators import kernel
 
 # Tags whose subtree is never text content.
 DROP_TAGS = {"script", "style", "noscript", "template", "svg", "head", "iframe"}
@@ -231,28 +232,13 @@ def html_extract(df: DataFrame, html_col: str = "html", id_col: str = "doc_id") 
         ]
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def row(key, html):
+        try:
+            res = extract_main(html or "")
+            links = extract_links(html or "")
+        except Exception:  # noqa: BLE001 — total on adversarial markup
+            return [(key, "", 0, 0, 0, 0, [])]
+        return [(key, res["main_text"], res["n_blocks"], res["n_content_blocks"],
+                 res["content_chars"], res["boiler_chars"], links)]
 
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for key, html in zip(pdf[id_col], pdf["html"]):
-                try:
-                    res = extract_main(html or "")
-                    links = extract_links(html or "")
-                except Exception:  # noqa: BLE001 — total on adversarial markup
-                    res = {
-                        "main_text": "", "n_blocks": 0, "n_content_blocks": 0,
-                        "content_chars": 0, "boiler_chars": 0,
-                    }
-                    links = []
-                out[id_col].append(key)
-                out["main_text"].append(res["main_text"])
-                out["n_blocks"].append(res["n_blocks"])
-                out["n_content_blocks"].append(res["n_content_blocks"])
-                out["content_chars"].append(res["content_chars"])
-                out["boiler_chars"].append(res["boiler_chars"])
-                out["links"].append(links)
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(run, schema=schema)
+    return kernel.map_rows(narrow, row, schema)

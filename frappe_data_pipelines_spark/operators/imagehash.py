@@ -25,11 +25,11 @@ operators/dedup.py's MinHash-LSH (text) — this is the pixel twin.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators import kernel
 
 # dHash grid: 9 columns × 8 rows of grayscale means → 8×8 comparison bits.
 _GRID_W, _GRID_H = 9, 8
@@ -198,32 +198,9 @@ def documents_as_pattern_images(
     ``documents_as_wav``: real containers the codec must actually parse.
     ``extra_off`` renders every image as its re-crawl variant (see
     ``synth_pattern_png``)."""
-    import pandas as pd
+    from frappe_data_pipelines_spark.operators.multimodal import _synth_media
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": [
-                        synth_pattern_png(int(d), extra_off) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=schema)
-    )
+    return _synth_media(docs, id_col, lambda d: [(d, synth_pattern_png(int(d), extra_off))])
 
 
 IMAGE_DHASH_SCHEMA = T.StructType(
@@ -238,70 +215,40 @@ IMAGE_DHASH_SCHEMA = T.StructType(
 )
 
 
+def _image_dhash_row(did, payload) -> list[tuple]:
+    """``image_dhash``'s row kernel; any decode failure, a null payload
+    included, dead-letters the row."""
+    try:
+        w, h, hi, lo = dhash_payload(b"" if payload is None else bytes(payload))
+        return [(did, w, h, hi, lo, None)]
+    except Exception as exc:  # noqa: BLE001 — zlib/struct errors too: a corrupt image must not kill the scan
+        return [(did, None, None, None, None, f"{type(exc).__name__}: {exc}")]
+
+
 def image_dhash(df: DataFrame, id_col: str = "doc_id", bin_col: str = "content") -> DataFrame:
     """binary image column → (width, height, dhash_hi, dhash_lo) via the
     real decoders; decode failures land in ``hash_error`` (totality — a
     corrupt image must not kill a 100 TB scan)."""
-    import pandas as pd
-
     narrow = df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(bin_col).alias("content")
     )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_DHASH_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    w, h, hi, lo = dhash_payload(bytes(payload))
-                    out["doc_id"].append(did)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["dhash_hi"].append(hi)
-                    out["dhash_lo"].append(lo)
-                    out["hash_error"].append(None)
-                except (ValueError, IndexError, EOFError) as exc:
-                    out["doc_id"].append(did)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["dhash_hi"].append(None)
-                    out["dhash_lo"].append(None)
-                    out["hash_error"].append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(run, schema=IMAGE_DHASH_SCHEMA)
+    return kernel.map_rows(narrow, _image_dhash_row, IMAGE_DHASH_SCHEMA)
 
 
 def pattern_image_dhash(
     docs: DataFrame, id_col: str = "doc_id", extra_off: int = 0
 ) -> DataFrame:
     """Fused ``image_dhash(documents_as_pattern_images(docs, extra_off))``:
-    the same ``synth_pattern_png`` → ``dhash_payload`` kernel sequence in
-    ONE mapInPandas stage, so the PNG bytes never cross the JVM↔Python
-    Arrow boundary — only doc_id goes in, only the hash row comes out
-    (r12 probe: two-stage 1.30/2.16 s best/median vs fused 0.75/1.24 at
-    sf0.1). Output is bit-identical to the composition by construction."""
-    import pandas as pd
+    the same row kernel applied to ``synth_pattern_png`` in ONE Python
+    pass, so the PNG bytes never cross the JVM↔Python Arrow boundary —
+    only doc_id goes in, only the hash row comes out (r12 probe: two-stage
+    1.30/2.16 s best/median vs fused 0.75/1.24 at sf0.1)."""
+    from frappe_data_pipelines_spark.operators.multimodal import _synth_media
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_DHASH_SCHEMA.fields}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                try:
-                    w, h, hi, lo = dhash_payload(synth_pattern_png(did, extra_off))
-                    vals = (did, w, h, hi, lo, None)
-                except (ValueError, IndexError, EOFError) as exc:
-                    vals = (did, None, None, None, None, f"{type(exc).__name__}: {exc}")
-                for k, v in zip(out, vals):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=IMAGE_DHASH_SCHEMA)
+    return _synth_media(
+        docs, id_col,
+        lambda d: _image_dhash_row(int(d), synth_pattern_png(int(d), extra_off)),
+        IMAGE_DHASH_SCHEMA,
     )
 
 
@@ -503,30 +450,9 @@ def documents_as_pattern_videos(docs: DataFrame, id_col: str = "doc_id",
                                 extra_off: int = 0) -> DataFrame:
     """(doc_id, content BINARY) of real pattern AVIs; ``extra_off``
     produces the re-encoded arrival batch for incremental dedup."""
-    import pandas as pd
+    from frappe_data_pipelines_spark.operators.multimodal import _synth_media
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": [synth_pattern_avi(int(d), extra_off) for d in pdf["doc_id"]],
-                }
-            )
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=schema)
-    )
+    return _synth_media(docs, id_col, lambda d: [(d, synth_pattern_avi(int(d), extra_off))])
 
 
 VIDEO_DHASH_SCHEMA = T.StructType(
@@ -540,6 +466,29 @@ VIDEO_DHASH_SCHEMA = T.StructType(
 )
 
 
+def _video_dhash_rows(did, payload) -> list[tuple]:
+    """``video_frame_dhash``'s row kernel: one row per frame; any failure,
+    a null payload included, appends a single error row."""
+    from frappe_data_pipelines_spark.operators.avimini import (
+        AviError,
+        avi_parse,
+        dib_decode_gray,
+    )
+
+    rows = []
+    try:
+        meta = avi_parse(b"" if payload is None else bytes(payload))
+        if meta["codec"] != "DIB":
+            raise AviError(f"dhash path needs DIB frames, got {meta['codec']}")
+        w, h = meta["width"], meta["height"]
+        for idx, frame in enumerate(meta["frames"]):
+            hi, lo = dhash_gray(w, h, 1, dib_decode_gray(frame, w, h))
+            rows.append((did, idx, hi, lo, None))
+    except Exception as exc:  # noqa: BLE001 — a corrupt container must not kill the scan
+        rows.append((did, None, None, None, f"{type(exc).__name__}: {exc}"))
+    return rows
+
+
 def video_frame_dhash(
     df: DataFrame, id_col: str = "doc_id", bin_col: str = "content"
 ) -> DataFrame:
@@ -548,88 +497,25 @@ def video_frame_dhash(
     emit a single error row (totality). MJPEG-coded videos are decodable
     via jpegmini but not closed-form oracleable — callers wanting them go
     through ``multimodal.video_frames``."""
-    import pandas as pd
-
-    from frappe_data_pipelines_spark.operators.avimini import (
-        AviError,
-        avi_parse,
-        dib_decode_gray,
-    )
-
     narrow = df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(bin_col).alias("content")
     )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_DHASH_SCHEMA.fields}
-
-            def emit(did, idx, hi, lo, err):
-                for k, v in zip(out, (did, idx, hi, lo, err)):
-                    out[k].append(v)
-
-            for did, payload in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    meta = avi_parse(bytes(payload))
-                    if meta["codec"] != "DIB":
-                        raise AviError(f"dhash path needs DIB frames, got {meta['codec']}")
-                    w, h = meta["width"], meta["height"]
-                    for idx, frame in enumerate(meta["frames"]):
-                        rows = dib_decode_gray(frame, w, h)
-                        hi, lo = dhash_gray(w, h, 1, rows)
-                        emit(did, idx, hi, lo, None)
-                except (AviError, ValueError, IndexError) as exc:
-                    emit(did, None, None, None, f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(run, schema=VIDEO_DHASH_SCHEMA)
+    return kernel.map_rows(narrow, _video_dhash_rows, VIDEO_DHASH_SCHEMA)
 
 
 def pattern_video_frame_dhash(
     docs: DataFrame, id_col: str = "doc_id", extra_off: int = 0
 ) -> DataFrame:
     """Fused ``video_frame_dhash(documents_as_pattern_videos(docs,
-    extra_off))``: the same ``synth_pattern_avi`` → ``avi_parse`` →
-    ``dib_decode_gray`` → ``dhash_gray`` kernel sequence in ONE
-    mapInPandas stage — the AVI container bytes never cross the
-    JVM↔Python Arrow boundary (see ``pattern_image_dhash``). Output is
-    bit-identical to the composition by construction."""
-    import pandas as pd
+    extra_off))``: the same row kernel applied to ``synth_pattern_avi`` in
+    ONE Python pass — the AVI container bytes never cross the JVM↔Python
+    Arrow boundary (see ``pattern_image_dhash``)."""
+    from frappe_data_pipelines_spark.operators.multimodal import _synth_media
 
-    from frappe_data_pipelines_spark.operators.avimini import (
-        AviError,
-        avi_parse,
-        dib_decode_gray,
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_DHASH_SCHEMA.fields}
-
-            def emit(did, idx, hi, lo, err):
-                for k, v in zip(out, (did, idx, hi, lo, err)):
-                    out[k].append(v)
-
-            for did in pdf["doc_id"]:
-                did = int(did)
-                try:
-                    meta = avi_parse(synth_pattern_avi(did, extra_off))
-                    if meta["codec"] != "DIB":
-                        raise AviError(f"dhash path needs DIB frames, got {meta['codec']}")
-                    w, h = meta["width"], meta["height"]
-                    for idx, frame in enumerate(meta["frames"]):
-                        rows = dib_decode_gray(frame, w, h)
-                        hi, lo = dhash_gray(w, h, 1, rows)
-                        emit(did, idx, hi, lo, None)
-                except (AviError, ValueError, IndexError) as exc:
-                    emit(did, None, None, None, f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(out)
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=VIDEO_DHASH_SCHEMA)
+    return _synth_media(
+        docs, id_col,
+        lambda d: _video_dhash_rows(int(d), synth_pattern_avi(int(d), extra_off)),
+        VIDEO_DHASH_SCHEMA,
     )
 
 

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from frappe_data_pipelines_spark.operators import kernel
+
 __all__ = ["write_range_clustered", "zorder_key_expr", "zorder_py"]
 
 
@@ -130,18 +132,14 @@ def build_bloom_index(
         F.col(column).alias("v"), F.input_file_name().alias("f")
     )
 
-    def per_file(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_file(_key, pdf: pd.DataFrame) -> pd.DataFrame:
         bits = bytearray(m_bits // 8)
         for v in pdf["v"].unique():
             for p in _bloom_positions(v, m_bits, k_hashes):
                 bits[p >> 3] |= 1 << (p & 7)
         return pd.DataFrame({"f": [pdf["f"].iloc[0]], "bloom": [bytes(bits)]})
 
-    rows = (
-        df.groupBy("f")
-        .applyInPandas(per_file, "f string, bloom binary")
-        .collect()
-    )
+    rows = kernel.apply_groups(df.groupBy("f"), per_file, "f string, bloom binary").collect()
     return {r["f"]: bytes(r["bloom"]) for r in rows}
 
 

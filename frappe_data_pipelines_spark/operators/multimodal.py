@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from frappe_data_pipelines_spark.operators import kernel
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -161,7 +163,7 @@ def decode_media_meta(
                     out["caption_error"].append(cap_err)
             yield pd.DataFrame(out)
 
-    return narrow.mapInPandas(run, schema=schema)
+    return kernel.map_batches(narrow, run, schema)
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -196,31 +198,29 @@ def synth_wav(doc_id: int, sample_rate: int = 8000) -> bytes:
     return buf.getvalue()
 
 
+_MEDIA_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("content", T.BinaryType()),
+])
+
+
+def _synth_media(docs: DataFrame, id_col: str, row, schema=_MEDIA_SCHEMA) -> DataFrame:
+    """``row(doc_id)`` over the docs' ids, spread round-robin across the
+    cluster first (a small parquet arrives as one split and the per-row
+    synthesis is the workload). Every synthetic-media generator
+    (``row`` emits ``(doc_id, content)``) and every fused ``pattern_*``
+    hash (``row`` is its composition's row kernel over the synthesized
+    bytes) runs through here."""
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    ids = docs.select(F.col(id_col).cast("long").alias("doc_id")).repartition(par)
+    return kernel.map_rows(ids, row, schema)
+
+
 def documents_as_wav(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content BINARY) of synthetic-but-REAL WAV files — the audio
     twin of ``documents_as_files``: real RIFF containers the ``wave``-module
     kernel must actually parse."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "content": [synth_wav(int(d)) for d in pdf["doc_id"]],
-            })
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=schema)
-    )
+    return _synth_media(docs, id_col, lambda d: [(d, synth_wav(int(d)))])
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType([
@@ -254,7 +254,6 @@ def audio_features(
     import wave
 
     import numpy as np
-    import pandas as pd
 
     def one(payload: bytes):
         import io
@@ -280,29 +279,13 @@ def audio_features(
         zc = int(((c[:-1] * c[1:]) < 0).sum()) if len(c) > 1 else 0
         return sr, nch, n, n * 1000 // sr, peak, rms, zc
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k: [] for k in AUDIO_FEATURES_SCHEMA.fieldNames()}
-            for doc_id, content in zip(pdf[id_col], pdf[bin_col]):
-                payload = bytes(content) if content is not None else b""
-                try:
-                    sr, nch, n, dur, peak, rms, zc = one(payload)
-                    err = None
-                except Exception as e:  # noqa: BLE001 — dead-letter the row
-                    sr = nch = n = dur = peak = rms = zc = None
-                    err = str(e)[:500]
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(sr)
-                out["n_channels"].append(nch)
-                out["n_samples"].append(n)
-                out["duration_ms"].append(dur)
-                out["peak"].append(peak)
-                out["rms"].append(rms)
-                out["zero_crossings"].append(zc)
-                out["audio_error"].append(err)
-            yield pd.DataFrame(out)
+    def row(doc_id, content):
+        try:
+            return [(doc_id, *one(bytes(content) if content is not None else b""), None)]
+        except Exception as e:  # noqa: BLE001 — dead-letter the row
+            return [(doc_id,) + (None,) * 7 + (str(e)[:500],)]
 
-    return df.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return kernel.map_rows(df, row, AUDIO_FEATURES_SCHEMA, [id_col, bin_col])
 
 
 def _synth_video_frames(doc_id: int) -> tuple[list[bytes], int, int]:
@@ -324,28 +307,10 @@ def _synth_video_frames(doc_id: int) -> tuple[list[bytes], int, int]:
 def documents_as_avi(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, content BINARY) of real MJPEG AVI containers — the video
     twin of ``documents_as_files``/``documents_as_wav``."""
-    import pandas as pd
-
     from frappe_data_pipelines_spark.operators.avimini import avi_write
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                frames, w, h = _synth_video_frames(int(d))
-                payloads.append(avi_write(frames, w, h, fps=10))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": payloads})
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=schema)
+    return _synth_media(
+        docs, id_col, lambda d: [(d, avi_write(*_synth_video_frames(int(d)), fps=10))]
     )
 
 
@@ -372,8 +337,6 @@ def video_frame_audit(df: DataFrame, id_col: str = "doc_id",
     of a video pipeline with every stage real. A malformed container
     dead-letters its row into ``video_error`` (I3 semantics, matching
     ``audio_features``/``image_dhash``) instead of failing the scan."""
-    import pandas as pd
-
     from frappe_data_pipelines_spark.operators.avimini import avi_parse
     from frappe_data_pipelines_spark.operators.jpegmini import jpeg_decode_gray
 
@@ -386,29 +349,13 @@ def video_frame_audit(df: DataFrame, id_col: str = "doc_id",
         return (m["width"], m["height"], m["fps"], len(frames), intact,
                 (dw, dh) == (m["width"], m["height"]), (len(frames) + 1) // 2)
 
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k: [] for k in VIDEO_AUDIT_SCHEMA.fieldNames()}
-            for doc_id, content in zip(pdf[id_col], pdf[bin_col]):
-                payload = bytes(content) if content is not None else b""
-                try:
-                    w, h, fps, nf, intact, dec, ns = one(doc_id, payload)
-                    err = None
-                except Exception as e:  # noqa: BLE001 — dead-letter the row
-                    w = h = fps = nf = intact = dec = ns = None
-                    err = str(e)[:500]
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["fps"].append(fps)
-                out["n_frames"].append(nf)
-                out["frames_intact"].append(intact)
-                out["first_frame_decodes"].append(dec)
-                out["n_sampled"].append(ns)
-                out["video_error"].append(err)
-            yield pd.DataFrame(out)
+    def row(doc_id, content):
+        try:
+            return [(doc_id, *one(doc_id, bytes(content) if content is not None else b""), None)]
+        except Exception as e:  # noqa: BLE001 — dead-letter the row
+            return [(doc_id,) + (None,) * 7 + (str(e)[:500],)]
 
-    return df.mapInPandas(run, schema=VIDEO_AUDIT_SCHEMA)
+    return kernel.map_rows(df, row, VIDEO_AUDIT_SCHEMA, [id_col, bin_col])
 
 
 def frame_sample(media_meta: DataFrame, every_n: int = 2) -> DataFrame:
@@ -476,25 +423,8 @@ def documents_as_wav_pattern(docs: DataFrame, id_col: str = "doc_id",
     """(doc_id, content BINARY) of real pattern WAVs — real RIFF containers
     the fingerprint kernel must actually parse; ``extra_v`` produces the
     re-encoded arrival batch for incremental dedup."""
-    import pandas as pd
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "content": [synth_wav_pattern(int(d), extra_v=extra_v) for d in pdf["doc_id"]],
-            })
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=schema)
+    return _synth_media(
+        docs, id_col, lambda d: [(d, synth_wav_pattern(int(d), extra_v=extra_v))]
     )
 
 
@@ -508,8 +438,7 @@ AUDIO_FP_SCHEMA = T.StructType([
 
 
 def _audio_fp_one(payload: bytes) -> tuple[int, int, int]:
-    """Per-payload fingerprint kernel shared by ``audio_fingerprint`` and
-    the fused ``pattern_audio_fingerprint`` — see the former's docstring."""
+    """Per-payload fingerprint kernel — see ``audio_fingerprint``."""
     import io
     import wave
 
@@ -536,6 +465,14 @@ def _audio_fp_one(payload: bytes) -> tuple[int, int, int]:
     return n, hi, lo
 
 
+def _audio_fp_row(did, payload) -> list[tuple]:
+    """``audio_fingerprint``'s row kernel."""
+    try:
+        return [(did, *_audio_fp_one(payload), None)]
+    except Exception as exc:  # noqa: BLE001 — wave raises its own Error; corrupt bytes must not kill the scan
+        return [(did, None, None, None, f"{type(exc).__name__}: {exc}")]
+
+
 def audio_fingerprint(
     df: DataFrame, id_col: str = "doc_id", bin_col: str = "content"
 ) -> DataFrame:
@@ -550,56 +487,21 @@ def audio_fingerprint(
     Decode failures and too-short clips land in ``fp_error`` (totality);
     near-dup pairing reuses the modality-agnostic
     ``imagehash.banded_hamming_pairs`` join."""
-    import pandas as pd
-
     narrow = df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(bin_col).alias("content")
     )
-    one = _audio_fp_one
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FP_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    n, hi, lo = one(payload)
-                    vals = (did, n, hi, lo, None)
-                except Exception as exc:  # noqa: BLE001 — wave raises its own Error; corrupt bytes must not kill the scan
-                    vals = (did, None, None, None, f"{type(exc).__name__}: {exc}")
-                for k, v in zip(out, vals):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    return kernel.map_rows(narrow, _audio_fp_row, AUDIO_FP_SCHEMA)
 
 
 def pattern_audio_fingerprint(
     docs: DataFrame, id_col: str = "doc_id", extra_v: int = 0
 ) -> DataFrame:
     """Fused ``audio_fingerprint(documents_as_wav_pattern(docs, extra_v))``:
-    the same ``synth_wav_pattern`` → ``_audio_fp_one`` kernel sequence in
-    ONE mapInPandas stage — the WAV container bytes never cross the
-    JVM↔Python Arrow boundary (see ``imagehash.pattern_image_dhash``).
-    Output is bit-identical to the composition by construction."""
-    import pandas as pd
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FP_SCHEMA.fields}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                try:
-                    n, hi, lo = _audio_fp_one(synth_wav_pattern(did, extra_v=extra_v))
-                    vals = (did, n, hi, lo, None)
-                except Exception as exc:  # noqa: BLE001 — wave raises its own Error; corrupt bytes must not kill the scan
-                    vals = (did, None, None, None, f"{type(exc).__name__}: {exc}")
-                for k, v in zip(out, vals):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
-        .repartition(par)
-        .mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    the same row kernel applied to ``synth_wav_pattern`` in ONE Python
+    pass — the WAV container bytes never cross the JVM↔Python Arrow
+    boundary (see ``imagehash.pattern_image_dhash``)."""
+    return _synth_media(
+        docs, id_col,
+        lambda d: _audio_fp_row(int(d), synth_wav_pattern(int(d), extra_v=extra_v)),
+        AUDIO_FP_SCHEMA,
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from frappe_data_pipelines_spark.functions.text import token_count_expr
+from frappe_data_pipelines_spark.operators import kernel
 
 
 def pack_sequences(
@@ -52,7 +53,7 @@ def pack_sequences(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
     )
 
-    def pack_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack_shard(_key, pdf: pd.DataFrame) -> pd.DataFrame:
         # first-fit-decreasing: big docs first, each into the first open
         # pack with room; deterministic tie-break by doc_id
         pdf = pdf.sort_values(["n_tokens", "doc_id"], ascending=[False, True])
@@ -77,7 +78,8 @@ def pack_sequences(
             }
         )
 
-    return base.groupBy("shard").applyInPandas(
+    return kernel.apply_groups(
+        base.groupBy("shard"),
         pack_shard,
         "pack_id string, doc_ids array<bigint>, total_tokens bigint, n_docs int",
     )
@@ -107,7 +109,7 @@ def rebalance_tail_packs(
     full = packs.filter(F.col("total_tokens") >= floor)
     tail = packs.filter(F.col("total_tokens") < floor)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(_key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["total_tokens", "pack_id"], ascending=[False, True])
         merged: list[dict] = []
         for _, row in pdf.iterrows():
@@ -131,11 +133,9 @@ def rebalance_tail_packs(
             }
         )
 
-    rebalanced = (
-        tail.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(
-            merge, "pack_id string, doc_ids array<bigint>, total_tokens bigint, n_docs int"
-        )
+    rebalanced = kernel.apply_groups(
+        tail.withColumn("g", F.lit(0)).groupBy("g"),
+        merge,
+        "pack_id string, doc_ids array<bigint>, total_tokens bigint, n_docs int",
     )
     return full.unionByName(rebalanced)

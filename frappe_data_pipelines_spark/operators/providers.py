@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from frappe_data_pipelines_spark.operators import kernel
+
 ERROR_MESSAGE_MAX = 500  # reference truncation: process_embedding.py:71
 
 
@@ -466,7 +468,7 @@ def caption_with_dead_letter(
             out[error_col] = errs
             yield out
 
-    return df.mapInPandas(run, schema=schema)
+    return kernel.map_batches(df, run, schema)
 
 
 def make_transport(url: str, timeout: float = 60.0, headers: dict | None = None):
@@ -531,7 +533,7 @@ def embed_with_dead_letter(
             out[error_col] = errs
             yield out
 
-    return df.mapInPandas(run, schema=schema)
+    return kernel.map_batches(df, run, schema)
 
 
 def split_dead_letters(df: DataFrame, error_col: str = "embed_error"):

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from frappe_data_pipelines_spark.functions.text import tokens_expr
+from frappe_data_pipelines_spark.operators import kernel
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +255,7 @@ def _mg_summaries(df: DataFrame, key_col: str, k: int) -> DataFrame:
         )
 
     keyed = df.select(F.col(key_col).cast("string").alias("k"))
-    return keyed.mapInPandas(part, schema="k string, w long")
+    return kernel.map_batches(keyed, part, "k string, w long")
 
 
 def misra_gries_heavy_hitters(

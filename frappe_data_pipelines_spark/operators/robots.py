@@ -26,11 +26,11 @@ beyond-the-reference web-corpus surface (htmlmini, urls).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators import kernel
 
 
 def parse_robots(text: str, agent: str = "*") -> list[tuple[bool, str]]:
@@ -95,19 +95,10 @@ def robots_rules(robots_df: DataFrame, host_col: str = "host",
     longest-match join then defaults them to allowed."""
     narrow = robots_df.select(F.col(host_col).alias("host"), F.col(text_col).alias("txt"))
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(host, txt):
+        return [(host, allow, prefix) for allow, prefix in parse_robots(txt or "", agent=agent)]
 
-        for pdf in batches:
-            hosts, allows, prefixes = [], [], []
-            for host, txt in zip(pdf["host"], pdf["txt"]):
-                for allow, prefix in parse_robots(txt or "", agent=agent):
-                    hosts.append(host)
-                    allows.append(allow)
-                    prefixes.append(prefix)
-            yield pd.DataFrame({"host": hosts, "allow": allows, "prefix": prefixes})
-
-    return narrow.mapInPandas(run, schema=ROBOTS_RULE_SCHEMA)
+    return kernel.map_rows(narrow, rows, ROBOTS_RULE_SCHEMA)
 
 
 def robots_filter(urls: DataFrame, rules: DataFrame,

@@ -81,6 +81,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from frappe_data_pipelines_spark.operators import kernel
+
 META_NAME = "_index_meta.json"
 
 
@@ -629,10 +631,17 @@ def _piece_ranks(index: SuffixIndex, pat_rows) -> dict:
             # build's skey derivation
             key = seg if isinstance(pat, str) else index.sep.join(seg)
             pieces.append((pid, pos, w, key))
-    spark = index.spark
-    prel = spark.createDataFrame(
-        pieces, "pattern_id long, pos long, width long, k string"
-    )
+    from pyspark.sql import types as T
+
+    from frappe_data_pipelines_spark.session import local_frame
+
+    # a local relation: the lookup job runs no Python task
+    prel = local_frame(index.spark, pieces, T.StructType([
+        T.StructField("pattern_id", T.LongType()),
+        T.StructField("pos", T.LongType()),
+        T.StructField("width", T.LongType()),
+        T.StructField("k", T.StringType()),
+    ]))
     lookup = None
     for w in sorted({p[2] for p in pieces}):
         t = index.skey(w).select(
@@ -754,7 +763,7 @@ def _kernel_scan(index: SuffixIndex, pat_rows) -> DataFrame:
              "next_r1": out_nr, "n": out_n}
         )
 
-    return index.wide().mapInPandas(scan, out_schema)
+    return kernel.map_batches(index.wide(), scan, out_schema)
 
 
 def indexed_pattern_counts(

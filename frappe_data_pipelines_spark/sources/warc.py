@@ -27,11 +27,11 @@ from __future__ import annotations
 import gzip
 import io
 import zlib
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from frappe_data_pipelines_spark.operators import kernel
 
 CRLF = b"\r\n"
 
@@ -190,23 +190,15 @@ def read_warc(
         F.col(path_col).alias("path"), F.col(content_col).alias("content")
     )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(path, content):
+        try:
+            recs = parse_warc(bytes(content) if content is not None else b"")
+        except Exception:  # noqa: BLE001 — total on corrupt archives
+            return []
+        return [
+            (path, r["warc_type"], r["uri"], r["date"], r["content_type"], r["text"], r["n_bytes"])
+            for r in recs
+            if not response_only or r["warc_type"] == "response"
+        ]
 
-        for pdf in batches:
-            rows = {k: [] for k in WARC_SCHEMA.fieldNames()}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    recs = parse_warc(bytes(content) if content is not None else b"")
-                except Exception:  # noqa: BLE001 — total on corrupt archives
-                    recs = []
-                for r in recs:
-                    if response_only and r["warc_type"] != "response":
-                        continue
-                    rows["path"].append(path)
-                    for k in ("warc_type", "uri", "date", "content_type", "text"):
-                        rows[k].append(r[k])
-                    rows["n_bytes"].append(r["n_bytes"])
-            yield pd.DataFrame(rows)
-
-    return narrow.mapInPandas(run, schema=WARC_SCHEMA)
+    return kernel.map_rows(narrow, rows, WARC_SCHEMA)

@@ -136,14 +136,22 @@ def test_decode_failure_totality(spark):
     import pyspark.sql.functions as F
 
     good = synth_pattern_png(5)
+    flipped = bytearray(good)
+    flipped[good.index(b"IDAT") + 4] ^= 0xFF  # first IDAT data byte: a zlib.error
     df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(b"\x89PNG\r\n\x1a\nGARBAGE")), (3, bytearray(b""))],
+        [(1, bytearray(good)), (2, bytearray(b"\x89PNG\r\n\x1a\nGARBAGE")), (3, bytearray(b"")),
+         (4, None), (5, bytearray(good[:16])), (6, flipped)],
         "doc_id long, content binary",
     )
     out = {r.doc_id: r for r in image_dhash(df).collect()}
     assert out[1].hash_error is None and out[1].dhash_hi is not None
     assert out[2].hash_error is not None and out[2].dhash_hi is None
     assert out[3].hash_error is not None
+    # a null payload, a truncated header (struct.error) and a corrupt
+    # deflate stream (zlib.error) dead-letter their rows too
+    assert out[4].hash_error == "ValueError: unsupported image format for dhash"
+    assert out[5].hash_error.startswith("error: ") and out[5].dhash_hi is None
+    assert out[6].hash_error.startswith("error: ") and out[6].dhash_hi is None
     # and the banded join silently skips failed rows
     from frappe_data_pipelines_spark.operators.imagehash import dhash_neardup_pairs
 
@@ -343,7 +351,8 @@ def test_video_dhash_and_neardup(spark):
     bad = spark.createDataFrame(
         [(1, bytearray(synth_pattern_avi(3))),
          (2, bytearray(avi_write([b"\xff\xd8notjpeg"], 9, 8))),
-         (3, bytearray(b"RIFFjunk"))],
+         (3, bytearray(b"RIFFjunk")),
+         (4, None)],
         "doc_id long, content binary",
     )
     out = video_frame_dhash(bad).collect()
@@ -353,6 +362,7 @@ def test_video_dhash_and_neardup(spark):
     assert len(by_doc[1]) == 8 and all(r.video_error is None for r in by_doc[1])
     assert len(by_doc[2]) == 1 and by_doc[2][0].video_error is not None
     assert len(by_doc[3]) == 1 and by_doc[3][0].video_error is not None
+    assert len(by_doc[4]) == 1 and by_doc[4][0].video_error is not None
 
 
 def test_banded_pairs_hot_bucket_star_degrade(spark):

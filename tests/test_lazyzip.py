@@ -176,9 +176,13 @@ def test_engine_kernel_task_reads_no_zip_directory(spark):
         assert lazy == 1.0 and zips > 0 and reads == 0.0, r
 
 
-def _kernel_families(spark):
+def _kernel_families(spark, tmp_path):
     """One plan per engine Python-kernel family; each lambda builds (and for the
-    scrub probe, runs) the plan that ships the kernel to the workers."""
+    scrub probe, the suffix index and the SQ8 write, runs) the plan that ships
+    the kernel to the workers."""
+    import numpy as np
+
+    from frappe_data_pipelines_spark.operators import ann
     from frappe_data_pipelines_spark.operators.blocklist import (
         blocklist_annotate_prepared,
         blocklist_hits,
@@ -194,12 +198,42 @@ def _kernel_families(spark):
         longest_intra_doc_repeat,
         winnow_fingerprints_fast,
     )
+    from frappe_data_pipelines_spark.operators.docgen import documents_as_files
     from frappe_data_pipelines_spark.operators.embed import embed_documents
+    from frappe_data_pipelines_spark.operators.enrich import _enrich_with_provider
+    from frappe_data_pipelines_spark.operators.extraction import extract_text, ocr_images
+    from frappe_data_pipelines_spark.operators.multimodal import audio_features
+    from frappe_data_pipelines_spark.operators.packing import (
+        pack_sequences,
+        rebalance_tail_packs,
+    )
+    from frappe_data_pipelines_spark.operators.providers import caption_with_dead_letter
+    from frappe_data_pipelines_spark.operators.quality import _mg_summaries
+    from frappe_data_pipelines_spark.operators.suffixindex import (
+        build_suffix_index,
+        indexed_pattern_counts,
+    )
+
+    class Context:  # a caller's provider: pickled by value, no engine reference
+        def contextualize(self, ids, idxs, totals):
+            return [""] * len(ids)
+
+        def describe(self, payloads, mimes):
+            return [""] * len(payloads)
 
     text = "the quick brown fox jumps over the lazy dog " * 3
     docs = spark.createDataFrame([(1, text), (2, text + "again")], "doc_id long, text string")
     vecs = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.01])], "vec_id long, embedding array<float>")
     terms = spark.createDataFrame([(1, "fox")], "term_id long, term string")
+    queries = spark.createDataFrame([(1, [1.0, 0.0])], "query_id long, query_vec array<double>")
+    codes = spark.createDataFrame([(1, [0]), (2, [1])], "id long, codes array<int>")
+    chunks = spark.createDataFrame([(1, 0, 1)], "doc_id long, chunk_index int, total_chunks int")
+    media = spark.createDataFrame([(1, b"RIFF")], "doc_id long, content binary")
+    packs = spark.createDataFrame(
+        [("0-0", [1], 5, 1), ("1-0", [2], 7, 1)],
+        "pack_id string, doc_ids array<bigint>, total_tokens bigint, n_docs int",
+    )
+    patterns = spark.createDataFrame([(1, "fox")], "pattern_id long, pattern string")
     return {
         "chunk_embed_documents (ingest, door)": lambda: chunk_embed_documents(docs),
         "chunk_documents": lambda: chunk_documents(docs),
@@ -213,6 +247,29 @@ def _kernel_families(spark):
             spark, corpus_doc_fingerprints(docs, min_len=25, k=20), [9], ["x" * 50],
             min_len=25, k=20,
         ),
+        "ann.knn_batch": lambda: ann.knn_batch(vecs, queries, k=1),
+        "ann.pq_search": lambda: ann.pq_search(codes, np.zeros((1, 2, 2)), [1.0, 0.0], k=1),
+        "ann.sq_train": lambda: ann.sq_train(vecs),
+        "ann.sq_search": lambda: ann.sq_search(
+            codes, np.zeros(1), np.ones(1), [1.0], k=1
+        ),
+        "providers.caption_with_dead_letter": lambda: caption_with_dead_letter(
+            media, provider_factory=Context
+        ),
+        "enrich._enrich_with_provider": lambda: _enrich_with_provider(chunks, Context()),
+        "multimodal.audio_features": lambda: audio_features(media),
+        "packing.pack_sequences": lambda: pack_sequences(docs),
+        "packing.rebalance_tail_packs": lambda: rebalance_tail_packs(packs),
+        "quality._mg_summaries": lambda: _mg_summaries(docs, "text", 2),
+        "suffixindex scan": lambda: indexed_pattern_counts(
+            build_suffix_index(docs, str(tmp_path / "sidx"), max_width=4), patterns
+        ),
+        "extraction.extract_text(real_kernels=True)": lambda: extract_text(
+            documents_as_files(docs), real_kernels=True
+        ),
+        "extraction.ocr_images": lambda: ocr_images(
+            media.selectExpr("cast(doc_id as string) as path", "content")
+        ),
     }
 
 
@@ -223,7 +280,7 @@ def test_every_kernel_family_imports_the_package_on_unpickle(spark, tmp_path, mo
     package would leave its workers on the eager invalidation."""
     import pyspark.core.rdd as rdd
 
-    for name, build in _kernel_families(spark).items():
+    for name, build in _kernel_families(spark, tmp_path).items():
         shipped = []
         prepare = rdd._prepare_for_python_RDD
 
@@ -256,3 +313,24 @@ print(json.dumps(dict(
 )))
 """)
             assert got == {"before": False, "imported": True, "lazy": True}, (name, i)
+
+
+def test_every_python_pass_goes_through_the_kernel_seam():
+    """Only ``operators/kernel.py`` may call ``mapInPandas``/``mapInArrow``/
+    ``applyInPandas``: a pass built anywhere else would ship a kernel that
+    need not refer to the package, so its workers could miss the shim."""
+    import ast
+
+    pkg = REPO / "frappe_data_pipelines_spark"
+    seam = pkg / "operators" / "kernel.py"
+    calls = [
+        f"{path.relative_to(REPO)}:{node.lineno} {node.func.attr}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != seam
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("mapInPandas", "mapInArrow", "applyInPandas")
+    ]
+    assert not calls, calls
+    assert "mapInPandas" in seam.read_text()
