@@ -27,10 +27,7 @@ from frappe_data_pipelines_spark.operators.embed import HashingEmbedder
 from frappe_data_pipelines_spark.operators.search import (
     RRF_OVERFETCH,
     BM25Stats,
-    equality_filter,
-    filtered_knn,
-    find_similar,
-    knn_topk,
+    DenseIndex,
     lexical_rerank,
     rrf_fuse_local,
 )
@@ -46,7 +43,14 @@ class SearchService:
 
     ``vectors`` must carry (id_col, vec_col) plus any filterable payload
     columns; ``corpus`` (optional) carries (id_col, text_col) for the sparse/
-    rerank stages."""
+    rerank stages.
+
+    The service keeps two caches, each built on the first request that
+    needs it, rebuilt when its frame or column is reassigned or any of the
+    frame's input files is rewritten, and freed by ``release_caches()``:
+    the dense index (``DenseIndex``: the vectors with |a| folded) that every
+    dense request and the hybrid dense pool score, and the BM25 statistics
+    (``BM25Stats``) of the hybrid sparse pool."""
 
     vectors: DataFrame
     corpus: DataFrame | None = None
@@ -56,7 +60,8 @@ class SearchService:
     embedder: object = field(default_factory=HashingEmbedder)
     reranker: object | None = None  # object with rerank(query, texts) -> scores
     _bm25: BM25Stats | None = field(default=None, init=False, repr=False, compare=False)
-    _bm25_key: tuple | None = field(default=None, init=False, repr=False, compare=False)
+    _dense: DenseIndex | None = field(default=None, init=False, repr=False, compare=False)
+    _keys: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def _embed_query(self, query_text: str) -> list[float]:
         return self.embedder.embed([query_text])[0]
@@ -69,12 +74,13 @@ class SearchService:
         use_reranker: bool = False,
     ) -> DataFrame:
         """Dense KNN with optional conjunctive filters and rerank-then-cut
-        (overfetch ×5 when reranking, reference heuristic)."""
-        qv = self._embed_query(query_text)
-        k = top_k * RERANK_OVERFETCH if use_reranker else top_k
-        hits = filtered_knn(self.vectors, qv, filters or {}, k=k,
-                            vec_col=self.vec_col, id_col=self.id_col)
-        if use_reranker and self.corpus is not None:
+        (overfetch ×5 when reranking, reference heuristic). With no
+        ``corpus`` there is no text to rerank: the top ``top_k`` come back
+        in vector order, as on a provider failure (J4)."""
+        rerank = use_reranker and self.corpus is not None
+        k = top_k * RERANK_OVERFETCH if rerank else top_k
+        hits = self._dense_index().knn(self._embed_query(query_text), k, self.id_col, filters)
+        if rerank:
             # broadcast the <= top_k x 5 candidates, never the corpus
             hits = F.broadcast(hits)
             cands = hits.join(self.corpus, hits[self.id_col] == self.corpus["doc_id"]) \
@@ -92,14 +98,12 @@ class SearchService:
 
     def search_by_document(self, query_text: str, document_id, top_k: int = 5) -> DataFrame:
         """Filtered search scoped to one source document (B6 equality
-        filter pushed into the scan)."""
+        filter applied before scoring)."""
         return self.search(query_text, top_k=top_k, filters={"label": document_id})
 
     def find_similar(self, target_id, top_k: int = 5, exclude_same: dict | None = None) -> DataFrame:
         """Item-to-item similarity with self-exclusion (C5/B7)."""
-        return find_similar(self.vectors, target_id, k=top_k,
-                            vec_col=self.vec_col, id_col=self.id_col,
-                            exclude_cols_equal=exclude_same)
+        return self._dense_index().similar(target_id, top_k, self.id_col, exclude_same)
 
     def hybrid_search(self, query_text: str, top_k: int = 10, rrf_k: int = 60) -> DataFrame:
         """Dense + BM25 fused by Reciprocal Rank Fusion — the declared-but-
@@ -107,17 +111,15 @@ class SearchService:
 
         The rows equal ``rrf_fuse(dense, bm25_scores(corpus,
         query_text.split()), k=rrf_k, top_k=top_k)``, served as two bounded
-        collects: the dense top ``top_k × 5`` and the sparse top ``top_k ×
-        5``, the latter scored from this service's BM25 statistics
-        (``BM25Stats``: built on the first call, rebuilt when the corpus's
-        files change, freed by ``release_caches()``). The fusion runs here
-        over at most 2·top_k·5 ids and the ``(doc_id, rrf)`` result is a
-        local relation, so collecting it runs no Spark job."""
+        collects: the dense top ``top_k × 5``, scored from this service's
+        dense index, and the sparse top ``top_k × 5``, scored from its BM25
+        statistics. The fusion runs here over at most 2·top_k·5 ids and the
+        ``(doc_id, rrf)`` result is a local relation, so collecting it runs
+        no Spark job."""
         if self.corpus is None:
             raise ValueError("hybrid_search needs a corpus DataFrame")
         pool = top_k * RRF_OVERFETCH
-        dense = knn_topk(self.vectors, self._embed_query(query_text), k=pool,
-                         vec_col=self.vec_col, id_col=self.id_col)
+        dense = self._dense_index().knn(self._embed_query(query_text), pool, self.id_col)
         dense_ids = [r[0] for r in dense.select(self.id_col).collect()]
         sparse = self._bm25_stats().top(query_text.split(), pool)
         rows = rrf_fuse_local(dense_ids, [r[0] for r in sparse], k=rrf_k, top_k=top_k)
@@ -136,22 +138,39 @@ class SearchService:
             T.StructField("rrf", T.DoubleType()),
         ])
 
+    def _dense_index(self) -> DenseIndex:
+        """The vectors with |a| folded, cached (``DenseIndex``)."""
+        return self._cached("_dense", self.vectors, self.vec_col, DenseIndex.build)
+
     def _bm25_stats(self) -> BM25Stats:
-        """The corpus's BM25 statistics, rebuilt when ``corpus``/``text_col``
-        is reassigned or any of the corpus's input files is rewritten."""
-        key = (id(self.corpus), self.text_col, input_files_stat_key(self.corpus))
-        if self._bm25 is None or self._bm25_key != key:
-            self.release_caches()
-            self._bm25 = BM25Stats.build(self.corpus, text_col=self.text_col)
-            self._bm25_key = key
-        return self._bm25
+        """The corpus's BM25 statistics."""
+        return self._cached("_bm25", self.corpus, self.text_col,
+                            lambda corpus, col: BM25Stats.build(corpus, text_col=col))
+
+    def _cached(self, name: str, source: DataFrame, col: str, build):
+        """The cache in field ``name``, built by ``build(source, col)`` and
+        rebuilt when ``source``/``col`` is reassigned or any of ``source``'s
+        input files is rewritten. The cache holds ``source``, so the ``id``
+        in its key cannot be reused by another frame while it stands."""
+        key = (id(source), col, input_files_stat_key(source))
+        if getattr(self, name) is None or self._keys.get(name) != key:
+            self._release(name)
+            setattr(self, name, build(source, col))
+            self._keys[name] = key
+        return getattr(self, name)
+
+    def _release(self, name: str) -> None:
+        held = getattr(self, name)
+        if held is not None:
+            held.release()
+        setattr(self, name, None)
+        self._keys.pop(name, None)
 
     def release_caches(self) -> None:
-        """Free the BM25 statistics ``hybrid_search`` keeps; the next hybrid
-        request rebuilds them."""
-        if self._bm25 is not None:
-            self._bm25.release()
-        self._bm25 = self._bm25_key = None
+        """Free the dense index and the BM25 statistics the service keeps;
+        the next request that needs one rebuilds it."""
+        self._release("_dense")
+        self._release("_bm25")
 
 
 @dataclass

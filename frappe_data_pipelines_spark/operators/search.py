@@ -17,6 +17,9 @@ Maps the reference's query surface (SURVEY §2 search API table):
   * ``BM25Stats`` / ``rrf_fuse_local`` — the serving form of the two:
     corpus statistics built once per service, a bounded sparse top-n per
     query, and the fusion over the two collected pools on the driver
+  * ``DenseIndex``          — the serving form of the dense operators: the
+    vectors with |a| folded, cached once per service and scored by every
+    dense request
   * ``lexical_rerank``      — deterministic stand-in for the Cohere reranker
     (J4, services/search_service.py:239-316): token-overlap scoring with the
     same overfetch×5-then-cut shape.
@@ -28,7 +31,11 @@ ONE ``array<double>`` literal with its norm folded on the driver, so
 ``knn_topk``/``filtered_knn`` plan no join and no broadcast at all;
 ``find_similar`` broadcasts its 1-row target (stored vector plus its norm,
 computed once on that side). Equality filters are applied BEFORE scoring so
-Catalyst pushes them into the scan.
+Catalyst pushes them into the scan (into the cached relation's batch
+pruning, for a ``DenseIndex``). The ``DenseIndex`` cache follows Spark's
+storage level (``.cache()``: memory, spilling to disk); at 100 TB the index
+is the vectors table persisted with its norm column, an item kept open
+next to the BM25 postings.
 """
 
 from __future__ import annotations
@@ -50,24 +57,41 @@ RRF_K = 60
 RRF_OVERFETCH = 5  # each side's candidate pool: top_k × 5
 BM25_K1 = 1.2
 BM25_B = 0.75
+_NORM = "__vec_norm"  # DenseIndex's cached |a| column
 
 
 # Measured and rejected: an unrolled 64-term arithmetic fold (planning alone cost 580 ms/request).
 # Measured and rejected: a numpy mapInArrow fold (1,040 ms CPU vs 475 ms per top-k).
-def _cosine_to(vec: Column, q: Column, q_norm: Column) -> Column:
+def _cosine_to(vec: Column, q: Column, q_norm: Column, vec_norm: Column | None = None) -> Column:
     """``round(cosine_similarity(vec, q), 6)`` with |q| supplied: the same
     ``try_divide(dot(a, q), |a| * |q|)`` arithmetic, so scores stay
-    bit-identical, but |q| is not recomputed per scored row."""
-    return F.round(F.try_divide(dot_product(vec, q), vector_norm(vec) * q_norm), 6)
+    bit-identical, but |q| is not recomputed per scored row. |a| is
+    ``vec_norm`` when given (``DenseIndex``'s cached ``vector_norm``), else
+    folded per row."""
+    a_norm = vector_norm(vec) if vec_norm is None else vec_norm
+    return F.round(F.try_divide(dot_product(vec, q), a_norm * q_norm), 6)
 
 
-def _score(vectors: DataFrame, query_vec: list[float], vec_col: str) -> DataFrame:
+def _score(vectors: DataFrame, query_vec: list[float], vec_col: str, norm: str | None = None) -> DataFrame:
     """Cosine score against a driver-side query: the vector is ONE literal
     plan node and |q| is the same sequential double fold as
-    ``vector_norm`` (not ``sum``, whose compensated summation can differ)."""
+    ``vector_norm`` (not ``sum``, whose compensated summation can differ).
+    ``norm`` names a column holding ``vector_norm(vec_col)``: |a| is read
+    from it and the column is dropped from the output."""
     q = np.asarray(query_vec, dtype=np.float64)
     q_norm = math.sqrt(reduce(lambda acc, x: acc + x * x, q.tolist(), 0.0))
-    return vectors.withColumn("score", _cosine_to(F.col(vec_col), F.lit(q), F.lit(q_norm)))
+    vec_norm = None if norm is None else F.col(norm)
+    scored = vectors.withColumn("score", _cosine_to(F.col(vec_col), F.lit(q), F.lit(q_norm), vec_norm))
+    return scored if norm is None else scored.drop(norm)
+
+
+def _knn(vectors: DataFrame, query_vec: list[float], k: int, vec_col: str, id_col: str,
+         norm: str | None = None) -> DataFrame:
+    return (
+        _score(vectors, query_vec, vec_col, norm)
+        .orderBy(F.desc("score"), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 def knn_topk(
@@ -78,11 +102,7 @@ def knn_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Brute-force cosine top-k; deterministic tie-break (score DESC, id ASC)."""
-    return (
-        _score(vectors, query_vec, vec_col)
-        .orderBy(F.desc("score"), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _knn(vectors, query_vec, k, vec_col, id_col)
 
 
 def equality_filter(df: DataFrame, filters: dict) -> DataFrame:
@@ -118,20 +138,62 @@ def find_similar(
     """C5 item-to-item: look up the stored vector for ``target_id`` and its
     norm (1-row broadcast, |target| computed once there), score everything
     else, drop self, top-k."""
+    return _similar(vectors, target_id, k, vec_col, id_col, exclude_cols_equal)
+
+
+def _similar(vectors: DataFrame, target_id, k: int, vec_col: str, id_col: str,
+             exclude_cols_equal: dict | None, norm: str | None = None) -> DataFrame:
+    """``find_similar``; ``norm`` as in ``_score``, for the target's |a| too."""
+    vec_norm = None if norm is None else F.col(norm)
     target = vectors.filter(F.col(id_col) == F.lit(target_id)).select(
         F.col(vec_col).cast("array<double>").alias("__q"),
-        vector_norm(F.col(vec_col)).alias("__qn"),
+        (vector_norm(F.col(vec_col)) if vec_norm is None else vec_norm).alias("__qn"),
     )
     scored = (
         vectors.crossJoin(F.broadcast(target))
-        .withColumn("score", _cosine_to(F.col(vec_col), F.col("__q"), F.col("__qn")))
-        .drop("__q", "__qn")
+        .withColumn("score", _cosine_to(F.col(vec_col), F.col("__q"), F.col("__qn"), vec_norm))
+        .drop("__q", "__qn", *([norm] if norm else []))
         .filter(F.col(id_col) != F.lit(target_id))
     )
     if exclude_cols_equal:
         for c, v in exclude_cols_equal.items():
             scored = scored.filter(F.col(c) != F.lit(v))
     return scored.orderBy(F.desc("score"), F.col(id_col).asc()).limit(k)
+
+
+@dataclass
+class DenseIndex:
+    """The vectors a service scores, kept once with |a| folded, in the
+    shape Qdrant keeps a collection (services/qdrant_service.py:139-145):
+    ``vectors`` plus a private ``vector_norm(vec_col)`` column, ``.cache()``d
+    so the first request that scans it materialises it and every later one
+    reads the cached rows, with no parquet decode and no norm fold.
+
+    Requests score through ``_score``/``_similar`` as the raw operators do,
+    so every score is bit-identical to ``knn_topk``/``filtered_knn``/
+    ``find_similar`` over ``vectors``; the equality filter runs before
+    scoring and the norm column is dropped before any row leaves."""
+
+    vectors: DataFrame
+    vec_col: str
+    frame: DataFrame
+
+    @classmethod
+    def build(cls, vectors: DataFrame, vec_col: str = "embedding") -> "DenseIndex":
+        # Measured and rejected: caching the vectors as array<double> (no gain over the stored type).
+        frame = vectors.withColumn(_NORM, vector_norm(F.col(vec_col))).cache()
+        return cls(vectors=vectors, vec_col=vec_col, frame=frame)
+
+    def release(self) -> None:
+        self.frame.unpersist()
+
+    def knn(self, query_vec: list[float], k: int, id_col: str, filters: dict | None = None) -> DataFrame:
+        """``filtered_knn(vectors, query_vec, filters, k)``'s rows."""
+        return _knn(equality_filter(self.frame, filters), query_vec, k, self.vec_col, id_col, _NORM)
+
+    def similar(self, target_id, k: int, id_col: str, exclude_cols_equal: dict | None = None) -> DataFrame:
+        """``find_similar(vectors, target_id, k)``'s rows."""
+        return _similar(self.frame, target_id, k, self.vec_col, id_col, exclude_cols_equal, _NORM)
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,14 @@
-"""Hybrid serving from per-service BM25 statistics, and the request
-counters of every ``SearchService`` request kind.
+"""Serving from per-service state -- the BM25 statistics of hybrid search
+and the dense index of every dense request -- and the request counters of
+every ``SearchService`` request kind.
 
 ``SearchService.hybrid_search`` must return exactly the rows of
 ``rrf_fuse(dense, bm25_scores(corpus, query.split()))`` while running two
-bounded collects per request; these tests pin the equality (sparse scores
-bit for bit, fused rows, Spark's HALF_UP rounding), the staleness rules of
-the statistics, and the jobs / tasks / shuffle bytes / Janino compiles a
-warm request costs."""
+bounded collects per request, and every dense request must score exactly
+as the raw-vector operators do; these tests pin the equality (sparse and
+dense scores bit for bit, fused rows, Spark's HALF_UP rounding), the
+staleness rules of both caches, and the jobs / tasks / shuffle bytes /
+Janino compiles a warm request costs."""
 
 from __future__ import annotations
 
@@ -18,6 +20,7 @@ from pathlib import Path
 
 import numpy as np
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,6 +29,8 @@ from frappe_data_pipelines_spark.operators.search import (
     BM25Stats,
     _score,
     bm25_scores,
+    equality_filter,
+    find_similar,
     rerank_with_provider,
     round_half_up,
     rrf_fuse,
@@ -267,6 +272,133 @@ def test_hybrid_statistics_follow_the_corpus_files(spark, tmp_path):
     cached = svc._bm25.docs  # noqa: SLF001
     svc.release_caches()
     assert svc._bm25 is None and not cached.is_cached  # noqa: SLF001
+
+
+# ---------------------------------------------------------------------------
+# dense index: every score == the raw-vector operators, bit for bit
+# ---------------------------------------------------------------------------
+
+
+def _id_scores(df) -> list[tuple]:
+    return [tuple(r) for r in df.select("vec_id", "score").collect()]
+
+
+def _ranked(df):
+    return df.orderBy(F.desc("score"), F.col("vec_id").asc())
+
+
+@pytest.fixture(scope="module")
+def perfbench_vectors(spark, perfbench_corpus, tmp_path_factory):
+    """search_serve's vectors: the perfbench corpus's chunks embedded as
+    perfbench embeds them (``array<float>``), labelled with their document
+    and read back from parquet."""
+    from frappe_data_pipelines_spark.operators.embed import embed_documents
+
+    chunks, queries = perfbench_corpus
+    path = str(tmp_path_factory.mktemp("dense") / "vectors")
+    embed_documents(chunks, text_col="text").select(
+        F.col("doc_id").alias("vec_id"), F.expr("doc_id div 1000").alias("label"), "embedding",
+    ).write.parquet(path)
+    return spark.read.parquet(path), queries[:4]
+
+
+@pytest.mark.parametrize("table", ["perfbench", "sf0.001"])
+def test_dense_index_scores_equal_raw_operators(spark, sf_dir, perfbench_vectors, table):
+    """search, a filtered search and find_similar (with and without
+    exclude_same) rank every row of the table, scored from the index, and
+    equal ``_score``/``find_similar`` over the raw vectors row for row."""
+    if table == "perfbench":
+        vectors, queries = perfbench_vectors
+    else:
+        vectors = load_table(spark, sf_dir, "embeddings")
+        queries = ["fast join table scan", "the data engine scan rows", "zzqx", "alpha"]
+    n = vectors.count()
+    rows = vectors.select("vec_id", "label").orderBy("vec_id").collect()
+    svc = api.SearchService(vectors=vectors)
+    try:
+        for q in queries:
+            qv = svc._embed_query(q)  # noqa: SLF001
+            got = svc.search(q, top_k=n)
+            assert got.schema == _score(vectors, qv, "embedding").schema
+            assert _id_scores(got) == _id_scores(_ranked(_score(vectors, qv, "embedding"))), q
+            label = {"label": rows[len(rows) // 2]["label"]}
+            want = _ranked(_score(equality_filter(vectors, label), qv, "embedding"))
+            assert _id_scores(svc.search(q, top_k=n, filters=label)) == _id_scores(want), q
+        for r in (rows[0], rows[-1]):
+            for exclude in (None, {"label": r["label"]}):
+                got = svc.find_similar(r["vec_id"], top_k=n, exclude_same=exclude)
+                want = find_similar(vectors, r["vec_id"], k=n, exclude_cols_equal=exclude)
+                assert got.schema == want.schema
+                assert _id_scores(got) == _id_scores(want), (r, exclude)
+    finally:
+        svc.release_caches()
+
+
+def test_dense_index_follows_the_vectors(spark, tmp_path):
+    """A rewritten vectors part file, a reassigned ``vectors`` and a changed
+    ``vec_col`` each rebuild the index (the old one unpersisted);
+    release_caches() leaves nothing persisted."""
+    rng = np.random.default_rng(3)
+
+    def table(path, ids, parts):
+        rows = [(i, i % 3, [float(x) for x in rng.normal(size=16)],
+                 [float(x) for x in rng.normal(size=16)]) for i in ids]
+        spark.createDataFrame(rows, "vec_id long, label long, embedding array<float>, alt array<float>") \
+            .repartition(parts).write.parquet(str(path))
+        return sorted(p for p in os.listdir(path) if p.endswith(".parquet"))
+
+    vec_dir, spare = tmp_path / "vectors", tmp_path / "spare"
+    part = table(vec_dir, range(40), 2)[0]
+    [spare_part] = table(spare, range(100, 120), 1)
+    _, corpus = _hybrid_tables(spark, tmp_path / "hybrid", duplicate_ids=False)
+    svc = api.SearchService(vectors=spark.read.parquet(str(vec_dir)), corpus=corpus)
+
+    def check(target):
+        got = _id_scores(svc.find_similar(target, top_k=50))
+        assert got == _id_scores(find_similar(svc.vectors, target, k=50, vec_col=svc.vec_col))
+        return svc._dense  # noqa: SLF001
+
+    first = check(0)
+    svc.search("alpha beta").collect()
+    svc.hybrid_search("alpha beta").collect()
+    assert svc._dense is first  # noqa: SLF001  — unchanged files: reused
+
+    (vec_dir / f".{part}.crc").unlink()
+    shutil.copy2(spare / spare_part, vec_dir / part)  # older mtime, new bytes
+    rebuilt = check(100)  # id 100 is only in the new bytes
+    # same plan as the rebuilt index, so only the handle can tell it was unpersisted
+    assert rebuilt is not first and not first.frame.is_cached
+
+    svc.vectors = spark.read.parquet(str(spare))
+    reassigned = check(105)
+    assert reassigned is not rebuilt and rebuilt.frame.storageLevel == StorageLevel.NONE
+
+    svc.vec_col = "alt"
+    alt = check(105)
+    assert alt is not reassigned and alt.vec_col == "alt"
+    assert reassigned.frame.storageLevel == StorageLevel.NONE
+
+    assert alt.frame.storageLevel != StorageLevel.NONE
+    stats = svc._bm25  # noqa: SLF001
+    assert stats.docs.storageLevel != StorageLevel.NONE
+    svc.release_caches()
+    assert svc._dense is None and svc._bm25 is None  # noqa: SLF001
+    assert alt.frame.storageLevel == StorageLevel.NONE
+    assert stats.docs.storageLevel == StorageLevel.NONE
+
+
+def test_first_dense_request_materialises_the_index(spark, tracer, tmp_path):
+    """The index adds no job: a cold search runs the one job an uncached
+    top-k runs, and the next request reads the cached rows."""
+    vectors, _ = _hybrid_tables(spark, tmp_path, duplicate_ids=False)
+    svc = api.SearchService(vectors=vectors)
+    try:
+        assert _counters(tracer, "cold_search", svc.search("alpha").collect)["jobs"] == 1
+        cache = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+        cached = cache.lookupCachedData(svc._dense.frame._jdf)  # noqa: SLF001
+        assert cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    finally:
+        svc.release_caches()
 
 
 # ---------------------------------------------------------------------------

@@ -680,11 +680,48 @@ def test_search_documents_never_ships_the_corpus(serve_tables, monkeypatch):
     assert fetches and all("In(doc_id" in ln for ln in fetches)  # pushed into the scan
 
 
+def _outside_cache(plan: str) -> str:
+    """``plan`` without the cached plan each InMemoryRelation prints under it."""
+    kept, cut = [], None
+    for ln in plan.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in ln else None
+        kept.append(ln)
+    return "\n".join(kept)
+
+
 def test_search_binds_query_norm_once(serve_tables):
+    """A warm dense request reads the service's index, where |a| is cached:
+    the request folds only the dot product and scans no vectors file."""
     vectors, _, _, _ = serve_tables
-    df = SearchService(vectors=vectors).search(QUERY, top_k=5)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("zip_with(") == 1  # dot(a, q) only: |q| and |a| fold without it
+    svc = SearchService(vectors=vectors)
+    try:
+        svc.search(QUERY, top_k=5).collect()  # the first request materialises the index
+        df = svc.search(QUERY, top_k=5)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("zip_with(") == 1  # dot(a, q) only: |q| and |a| fold without it
+        assert _outside_cache(plan).count("aggregate(") == 1  # and |a| is read, not folded
+        for warm in (df, svc.search(QUERY, top_k=5, filters={"label": 1}), svc.find_similar(7)):
+            warm.collect()
+            executed = warm._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in executed
+            assert "FileScan" not in _outside_cache(executed), executed
+            assert _outside_cache(warm._jdf.queryExecution().optimizedPlan().toString()) \
+                .count("aggregate(") == 1
+    finally:
+        svc.release_caches()
+
+
+def test_rerank_without_corpus_returns_top_k_in_vector_order(serve_tables):
+    vectors, _, _, _ = serve_tables
+    svc = SearchService(vectors=vectors)
+    try:
+        got = svc.search(QUERY, top_k=3, use_reranker=True).collect()
+        assert len(got) == 3 and got == svc.search(QUERY, top_k=3).collect()
+    finally:
+        svc.release_caches()
 
 
 def test_rerank_broadcasts_candidates_not_corpus(serve_tables):
