@@ -47,7 +47,8 @@ class SearchService:
 
     The service keeps two caches, each built on the first request that
     needs it, rebuilt when its frame or column is reassigned or any of the
-    frame's input files is rewritten, and freed by ``release_caches()``:
+    frame's input files is rewritten or its cached rows were unpersisted,
+    and freed by ``release_caches()``:
     the dense index (``DenseIndex``: the vectors with |a| folded) that every
     dense request and the hybrid dense pool score, and the BM25 statistics
     (``BM25Stats``) of the hybrid sparse pool."""
@@ -149,11 +150,15 @@ class SearchService:
 
     def _cached(self, name: str, source: DataFrame, col: str, build):
         """The cache in field ``name``, built by ``build(source, col)`` and
-        rebuilt when ``source``/``col`` is reassigned or any of ``source``'s
-        input files is rewritten. The cache holds ``source``, so the ``id``
-        in its key cannot be reused by another frame while it stands."""
+        rebuilt when ``source``/``col`` is reassigned, any of ``source``'s
+        input files is rewritten, or the cached frame was unpersisted (Spark
+        shares one entry between equal plans, so another service's
+        ``release_caches()`` drops it). The cache holds ``source``, so the
+        ``id`` in its key cannot be reused by another frame while it
+        stands."""
         key = (id(source), col, input_files_stat_key(source))
-        if getattr(self, name) is None or self._keys.get(name) != key:
+        held = getattr(self, name)
+        if held is None or self._keys.get(name) != key or not held.live():
             self._release(name)
             setattr(self, name, build(source, col))
             self._keys[name] = key

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from frappe_data_pipelines_spark.functions.text import fingerprint_expr
 from frappe_data_pipelines_spark.functions.vectors import cosine_similarity
 from frappe_data_pipelines_spark.operators import kernel
+from frappe_data_pipelines_spark.operators.imagehash import _bucket_pairs
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -210,16 +211,13 @@ def minhash_lsh_pairs(
     (id_a < id_b) candidates with estimated jaccard (= fraction of equal
     signature positions).
 
-    **Hot-bucket bound (VERDICT r4 #4):** a (band, bucket) key holding B
-    docs yields B² rows from the self-join in ONE task — on a 100 TB corpus
-    with a large near-identical family (boilerplate pages, templated spam)
-    B can reach 10⁵+ and the bucket alone would emit ~10¹⁰ candidates.
-    Buckets larger than ``max_bucket_size`` therefore degrade to STAR
-    linking: every member pairs with the bucket's minimum doc_id only
-    (B−1 pairs). This keeps the candidate graph's connected components
-    identical — downstream clustering (``dedup_star_clusters``) groups the
-    family exactly as all-pairs would — while bounding any bucket's output
-    linearly. The degrade is deterministic and observable via
+    **Hot-bucket bound (VERDICT r4 #4):** buckets larger than
+    ``max_bucket_size`` degrade to STAR linking against the bucket's
+    minimum doc_id (``imagehash._bucket_pairs``, the join every near-dup
+    modality shares), so no bucket's output grows past linear. The
+    candidate graph's connected components are unchanged — downstream
+    clustering (``dedup_star_clusters``) groups the family exactly as
+    all-pairs would. The degrade is observable via
     ``minhash_lsh_bucket_stats`` (skipped-pair counts per hot bucket); what
     is lost is only the per-pair jaccard estimate between non-hub members
     of a hot bucket, never membership of the duplicate cluster.
@@ -228,68 +226,20 @@ def minhash_lsh_pairs(
     # signatures ride along with the bucket rows (bands× bytes) so pair
     # estimation happens INSIDE the bucket join — no join back to the
     # signature table, which previously cost two extra shuffle joins.
-    # NOT cached: an interleaved A/B (BENCH_RUNS_r12.json.lsh_cache_ab)
-    # measured the InMemoryRelation materialization barrier at ~0.5-0.8 s
-    # against ~0 recompute saving — the three consumers' passes pipeline
-    # and reuse the bucketize exchange, while the cache serializes them
-    # behind a full materialization. (An r13 A/B also tried an explicit
-    # (band, bucket) repartition to share one exchange across all four
-    # consumers: slower — median 3.23 vs 2.32 s — the added exchange
-    # costs more than the reuse saves; BENCH_RUNS_r13.json.lsh_repart_ab.
-    # Both cache-removal verdicts re-confirmed this round in the same
-    # window: nocache best 2.04/1.96 vs cache 2.38/2.20.)
+    # Not cached: the consumers reuse the bucketize exchange (r12 lsh_cache_ab, r13 lsh_repart_ab).
     bucketed = _lsh_bucketize(sig, num_hashes, bands, keep_sig=True)
-
-    def est(a, b):
-        return F.round(
-            F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda x: x))
-            / F.lit(float(num_hashes)),
-            6,
-        )
-
-    # The hot list is tiny BY CONSTRUCTION (≤ corpus/max_bucket_size rows),
-    # so route via broadcast joins: the common cool path pays one broadcast
-    # anti-join instead of a second (band,bucket) shuffle of the full
-    # bucketed set against the size table.
-    hot = (
-        bucketed.groupBy("band", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("__bsz"),
-            F.min("doc_id").alias("__hub"),
-            F.min_by("sig", "doc_id").alias("__hub_sig"),
-        )
-        .filter(F.col("__bsz") > F.lit(max_bucket_size))
-    )
-    # (r13: sharing one full-hot broadcast between anti-join and hub join
-    # was tried and is a plan no-op — column pruning pushes through the
-    # broadcast hint and the two exchanges stay distinct; kept as r12)
-    cool = bucketed.join(
-        F.broadcast(hot.select("band", "bucket")), ["band", "bucket"], "left_anti"
-    )
-    pairs_cool = (
-        cool.alias("x")
-        .join(cool.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("id_a"),
-            F.col("y.doc_id").alias("id_b"),
-            est(F.col("x.sig"), F.col("y.sig")).alias("est_jaccard"),
-        )
-    )
-    # hot buckets: hub = min(doc_id) < every other member, so (hub, member)
-    # is already canonically ordered
-    pairs_hot = (
-        bucketed.join(F.broadcast(hot), ["band", "bucket"])
-        .filter(F.col("doc_id") != F.col("__hub"))
-        .select(
-            F.col("__hub").alias("id_a"),
-            F.col("doc_id").alias("id_b"),
-            est(F.col("__hub_sig"), F.col("sig")).alias("est_jaccard"),
-        )
-    )
+    pairs = _bucket_pairs(bucketed, ["band", "bucket"], ["sig"], max_bucket_size)
     # a pair colliding in k bands appears k times with the SAME estimate —
     # distinct over the 3 columns is the same dedup as over (id_a, id_b)
-    return pairs_cool.unionByName(pairs_hot).distinct()
+    return pairs.select(
+        F.col("doc_a").alias("id_a"),
+        F.col("doc_b").alias("id_b"),
+        F.round(
+            F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda x: x))
+            / F.lit(float(num_hashes)),
+            6,
+        ).alias("est_jaccard"),
+    ).distinct()
 
 
 def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

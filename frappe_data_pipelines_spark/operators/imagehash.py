@@ -17,6 +17,15 @@ Everything pixel-side runs through the REAL stdlib codecs in
 16-bit band keys → bit_count on JVM longs), so the scale path is one
 bounded shuffle, no cartesian anywhere.
 
+This module also owns the one bucket-pair join every near-dup modality
+shares: ``_bucket_pairs`` (the banded self-join with its hot-bucket star
+degrade) serves text MinHash-LSH (``dedup.minhash_lsh_pairs``), image and
+audio dHash (``banded_hamming_pairs``) and frame-aligned video
+(``video_neardup_pairs``); ``_band_probe`` (the broadcast new-batch probe)
+serves ``banded_hamming_join`` and ``video_neardup_join``. Each operator
+keeps only its own last step: the distance filter, the dedup and, for
+video, the close-frame count.
+
 Reference parity: the reference's media surface stops at decode+describe
 (fdp/services/vision_service.py); image-level near-dup is part of this
 engine's beyond-reference training-pipeline surface, same family as
@@ -25,7 +34,7 @@ operators/dedup.py's MinHash-LSH (text) — this is the pixel twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -252,16 +261,119 @@ def pattern_image_dhash(
     )
 
 
-def dhash_neardup_pairs(
-    hashes: DataFrame,
-    max_hamming: int = 6,
-    id_col: str = "doc_id",
+# ---------------------------------------------------------------------------
+# the bucket-pair join every near-dup modality pairs through: text MinHash
+# bands (operators/dedup.py), image/audio dHash bands, frame-aligned video
+# bands
+# ---------------------------------------------------------------------------
+
+
+def _bands64(hi: str, lo: str) -> Column:
+    """(band_idx, band_val): the four 16-bit bands of the 64-bit signature
+    in columns ``hi``/``lo`` (two unsigned 32-bit halves), one row each."""
+    return F.posexplode(
+        F.array(
+            F.col(lo) % 65536,
+            (F.col(lo) / 65536).cast("long"),
+            F.col(hi) % 65536,
+            (F.col(hi) / 65536).cast("long"),
+        )
+    ).alias("band_idx", "band_val")
+
+
+def _signatures(df: DataFrame, id_col: str, hi_col: str, lo_col: str, *extra: str) -> DataFrame:
+    """The non-null signatures of ``df`` as (doc_id, *extra, hi, lo). The
+    pair operators cache this table, so while such a cache stands Spark
+    serves an incremental join's equal narrowing from it."""
+    return df.where(F.col(hi_col).isNotNull()).select(
+        F.col(id_col).alias("doc_id"), *extra, F.col(hi_col).alias("hi"), F.col(lo_col).alias("lo")
+    )
+
+
+def _hamming() -> Column:
+    """Exact Hamming distance of a pair's (hi_a, lo_a) and (hi_b, lo_b)."""
+    return (
+        F.bit_count(F.expr("hi_a ^ hi_b")) + F.bit_count(F.expr("lo_a ^ lo_b"))
+    ).cast("int")
+
+
+def _bucket_pairs(
+    rows: DataFrame, keys: list[str], payload: list[str], max_bucket_size: int
 ) -> DataFrame:
-    """Banded near-dup pairs over dHash columns — see
-    ``banded_hamming_pairs`` (the modality-agnostic join this wraps)."""
-    return banded_hamming_pairs(
-        hashes, max_hamming=max_hamming, id_col=id_col,
-        hi_col="dhash_hi", lo_col="dhash_lo",
+    """Every pair of ``rows`` that share a bucket (equal ``keys``), as
+    (doc_a < doc_b, *keys, <p>_a, <p>_b for each ``payload`` column p).
+    ``rows`` carries ``doc_id``, ``keys`` and ``payload``. A pair sharing k
+    buckets appears k times; the caller filters and dedups.
+
+    Scale shape: one shuffle on the bucket keys; no n² term. **Hot-bucket
+    bound:** a bucket holding B rows would emit B² self-join rows in ONE
+    task, and a 100 TB corpus has million-strong near-identical families
+    (boilerplate pages, one logo, one intro frame). Buckets larger than
+    ``max_bucket_size`` therefore degrade to STAR linking: every member
+    pairs with the bucket's minimum doc_id only (B−1 rows). Connected
+    components are unchanged; what is lost is only the pair between two
+    non-hub members of a hot bucket. The degrade is deterministic, and
+    catalog oracles run with buckets far below the default cap, so their
+    SQL mirrors need no hot branch."""
+    # the hot list is tiny by construction (≤ rows/max_bucket_size), so
+    # both the cool anti-join and the hub join broadcast it
+    hot = (
+        rows.groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("__bsz"),
+            F.min("doc_id").alias("__hub"),
+            *[F.min_by(p, "doc_id").alias(f"__hub_{p}") for p in payload],
+        )
+        .filter(F.col("__bsz") > F.lit(max_bucket_size))
+    )
+    # r13: one shared full-hot broadcast for both joins is a plan no-op (pruning splits it again)
+    cool = rows.join(F.broadcast(hot.select(*keys)), keys, "left_anti")
+    pairs_cool = (
+        cool.alias("x")
+        .join(cool.alias("y"), keys)
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            *keys,
+            *[F.col(f"x.{p}").alias(f"{p}_a") for p in payload],
+            *[F.col(f"y.{p}").alias(f"{p}_b") for p in payload],
+        )
+    )
+    # hub = min(doc_id) < every other member, so (hub, member) is ordered
+    pairs_hot = (
+        rows.join(F.broadcast(hot), keys)
+        .filter(F.col("doc_id") != F.col("__hub"))
+        .select(
+            F.col("__hub").alias("doc_a"),
+            F.col("doc_id").alias("doc_b"),
+            *keys,
+            *[F.col(f"__hub_{p}").alias(f"{p}_a") for p in payload],
+            *[F.col(p).alias(f"{p}_b") for p in payload],
+        )
+    )
+    return pairs_cool.unionByName(pairs_hot)
+
+
+def _band_probe(new: DataFrame, corpus: DataFrame, keys: list[str]) -> DataFrame:
+    """Every (new, corpus) pair of band rows sharing ``keys``, as
+    (doc_a = new id, doc_b = corpus id, *keys, hi_a, lo_a, hi_b, lo_b);
+    both sides carry doc_id, ``keys``, hi and lo. A pair sharing k buckets
+    appears k times.
+
+    Scale shape: the new batch is a micro-batch, orders of magnitude
+    smaller than the corpus, so its band rows BROADCAST and the corpus pays
+    ONE scan with a map-side probe: no shuffle of the corpus, which is what
+    makes this runnable per ingest batch."""
+    return (
+        corpus.alias("b")
+        .join(F.broadcast(new.alias("a")), keys)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *keys,
+            *[F.col(f"{s}.{p}").alias(f"{p}_{s}") for s in "ab" for p in ("hi", "lo")],
+        )
     )
 
 
@@ -273,135 +385,29 @@ def banded_hamming_pairs(
     lo_col: str = "dhash_lo",
     max_bucket_size: int = 1024,
 ) -> DataFrame:
-    """Banded near-dup pairs over ANY 64-bit Hamming-space signature
-    (two unsigned 32-bit halves): explode 4×16-bit bands → shuffle on
-    (band_index, band_value) → distinct candidate pairs → exact Hamming
-    filter on the JVM (``bit_count(hi⊕hi) + bit_count(lo⊕lo)``). The
-    image dHash and the audio energy fingerprint both ride this join —
-    Hamming-space banding is modality-agnostic.
+    """Banded near-dup pairs (doc_a < doc_b, hamming) over ANY 64-bit
+    Hamming-space signature (two unsigned 32-bit halves): 4×16-bit bands →
+    ``_bucket_pairs`` on (band_idx, band_val) → exact Hamming filter on the
+    JVM → dedup on the pair. The image dHash and the audio energy
+    fingerprint both ride this join — Hamming-space banding is
+    modality-agnostic.
 
-    Scale shape: one shuffle keyed on 16-bit band values (bounded key
-    cardinality 4·65536 with corpus-proportional bucket sizes); no n² term.
     Recall contract: a pair at Hamming ≤ max_hamming is surfaced whenever
     its differing bits touch ≤ 3 of the 4 bands (guaranteed complete for
-    Hamming ≤ 3; the standard LSH-banding trade above that). Every
-    surfaced pair is EXACT — the final filter recomputes true distance.
-
-    **Hot-bucket bound** (the same degrade ``minhash_lsh_pairs`` carries):
-    a (band, value) bucket holding B signatures yields B² self-join rows
-    in ONE task — a 100 TB image corpus has million-strong families of
-    the same logo/tracking pixel. Buckets larger than ``max_bucket_size``
-    degrade to STAR linking against the bucket's minimum doc_id (B−1
-    rows). Inside a hot bucket, recall degrades from pairwise to
-    hub-distance (a member within ``max_hamming`` of another member but
-    not of the hub is missed) — deterministic, and acceptable precisely
-    because hot Hamming buckets are near-identical families; exactness of
-    every SURFACED pair is unaffected. Catalog oracles run with corpora
-    whose buckets sit far below the default cap, so the SQL mirror needs
-    no hot branch.
-    """
-    # cache the narrow post-kernel hash table (3 longs/row): the hot
-    # groupBy, the cool anti-join, and the hub join all re-reference this
-    # subtree, and without the cache Spark re-runs the upstream Python
-    # signature stage (decode + hash) three times — the dominant cost when
-    # hashes come off a mapInPandas kernel. An r13 A/B re-tested the
-    # alternative (drop the cache, share one keyed repartition exchange
-    # across all four consumers — the shape that wins for the JVM-upstream
-    # LSH): it lost here twice running (image median 2.46 vs 2.22 s, video
-    # 3.80 vs 3.00 — BENCH_RUNS_r13.json.banded_cache_ab); the in-memory
-    # columnar cache beats four shuffle-file reads when the upstream rows
-    # are this narrow. Lifetime: the CacheManager dedupes by analyzed
-    # plan, so repeated calls over the same source reuse one entry rather
-    # than piling up; distinct sources accumulate until
-    # spark.catalog.clearCache() (which the bench harness issues per
-    # pass) or session end — the repo-wide .cache() convention
-    # (tpch_extra, textqueries fps).
-    h = (
-        hashes.where(F.col(hi_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(hi_col).alias("dhash_hi"),
-            F.col(lo_col).alias("dhash_lo"),
-        )
-        .cache()
+    Hamming ≤ 3; the standard LSH-banding trade above that), and inside a
+    bucket past ``max_bucket_size`` only pairs with the hub are surfaced.
+    Every surfaced pair is EXACT — the final filter recomputes true
+    distance."""
+    # cached: three reads of the narrow table (r13 banded_cache_ab: beats a shared exchange)
+    h = _signatures(hashes, id_col, hi_col, lo_col).cache()
+    pairs = _bucket_pairs(
+        h.select("*", _bands64("hi", "lo")), ["band_idx", "band_val"], ["hi", "lo"],
+        max_bucket_size,
     )
-    bands = h.select(
-        "doc_id",
-        "dhash_hi",
-        "dhash_lo",
-        F.posexplode(
-            F.array(
-                F.col("dhash_lo") % 65536,
-                (F.col("dhash_lo") / 65536).cast("long"),
-                F.col("dhash_hi") % 65536,
-                (F.col("dhash_hi") / 65536).cast("long"),
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    # hot list is tiny by construction (≤ corpus/max_bucket_size rows) →
-    # broadcast both the anti-join (cool path) and the hub join (hot path)
-    hot = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(
-            F.count(F.lit(1)).alias("__bsz"),
-            F.min("doc_id").alias("__hub"),
-            F.min_by("dhash_hi", "doc_id").alias("__hub_hi"),
-            F.min_by("dhash_lo", "doc_id").alias("__hub_lo"),
-        )
-        .filter(F.col("__bsz") > F.lit(max_bucket_size))
-    )
-    # hot list is tiny by construction (≤ corpus/max_bucket_size rows) →
-    # broadcast both the anti-join (cool path) and the hub join (hot path).
-    # (r13: sharing ONE full-hot broadcast between the two joins was tried
-    # and is a plan NO-OP — Catalyst prunes the anti-join's build side
-    # back to the key columns through the broadcast hint, so the two
-    # BroadcastExchanges differ and never reuse; before/after plans
-    # byte-identical mod expr ids. Kept in the r12 form.)
-    cool = bands.join(
-        F.broadcast(hot.select("band_idx", "band_val")),
-        ["band_idx", "band_val"],
-        "left_anti",
-    )
-    left = cool.alias("x")
-    right = cool.alias("y")
-    pairs_hot = (
-        bands.join(F.broadcast(hot), ["band_idx", "band_val"])
-        .filter(F.col("doc_id") != F.col("__hub"))
-        .select(
-            # hub = min(doc_id) < member, so (hub, member) is ordered
-            F.col("__hub").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.col("__hub_hi").alias("hi_a"),
-            F.col("__hub_lo").alias("lo_a"),
-            F.col("dhash_hi").alias("hi_b"),
-            F.col("dhash_lo").alias("lo_b"),
-        )
-    )
-    cand = (
-        left.join(
-            right,
-            on=[
-                F.col("x.band_idx") == F.col("y.band_idx"),
-                F.col("x.band_val") == F.col("y.band_val"),
-                F.col("x.doc_id") < F.col("y.doc_id"),
-            ],
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.dhash_hi").alias("hi_a"),
-            F.col("x.dhash_lo").alias("lo_a"),
-            F.col("y.dhash_hi").alias("hi_b"),
-            F.col("y.dhash_lo").alias("lo_b"),
-        )
-        .unionByName(pairs_hot)
-    )
-    # exact Hamming BEFORE the pair dedup: the distance is functionally
-    # determined by (doc_a, doc_b), so filtering first is equivalent — and
-    # it prunes non-matching candidates before they pay the dedup shuffle
-    hamming = F.bit_count(F.expr("hi_a ^ hi_b")) + F.bit_count(F.expr("lo_a ^ lo_b"))
+    # filter before the dedup: a pair stands when any of its candidates is
+    # close, and far candidates never reach the dedup's shuffle
     return (
-        cand.withColumn("hamming", hamming.cast("int"))
+        pairs.withColumn("hamming", _hamming())
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b"])
         .select("doc_a", "doc_b", "hamming")
@@ -526,8 +532,8 @@ def video_neardup_pairs(
     id_col: str = "doc_id",
     max_bucket_size: int = 1024,
 ) -> DataFrame:
-    """Video near-dup pairs from per-frame dHashes: the banded-Hamming
-    join keyed by (frame_idx, band_idx, band_val) — FRAME-ALIGNED, so two
+    """Video near-dup pairs from per-frame dHashes: ``_bucket_pairs``
+    keyed by (frame_idx, band_idx, band_val) — FRAME-ALIGNED, so two
     videos only pair through the same temporal position — then one
     aggregation counts a pair's close frames and keeps pairs with
     ``min_close_frames`` or more. ``n_close_frames`` counts frames the
@@ -537,93 +543,18 @@ def video_neardup_pairs(
 
     Scale shape: one shuffle on (frame, band) keys + one groupBy on the
     pair — per-frame band buckets are strictly smaller than video-level
-    ones, and no n² term exists anywhere. Hot (frame, band, value) buckets
-    past ``max_bucket_size`` degrade to star linking against the bucket's
-    minimum doc_id (same bound and same rationale as
-    ``banded_hamming_pairs``: a million-strong family of one intro/outro
-    frame must not emit B² rows in one task; hub-anchored counts are the
-    deterministic, observable degrade)."""
-    # cache: same rationale (and same r13 A/B verdict) as
-    # banded_hamming_pairs — three downstream references must not re-run
-    # the per-frame decode+hash Python stage; the shared-exchange
-    # alternative measured slower twice running
-    # (BENCH_RUNS_r13.json.banded_cache_ab)
-    h = (
-        frame_hashes.where(F.col("dhash_hi").isNotNull())
-        .select(F.col(id_col).alias("doc_id"), "frame_idx", "dhash_hi", "dhash_lo")
-        .cache()
+    ones. Hot (frame, band, value) buckets past ``max_bucket_size`` degrade
+    to star linking as in ``banded_hamming_pairs``: a million-strong family
+    of one intro/outro frame must not emit B² rows in one task;
+    hub-anchored counts are the deterministic, observable degrade."""
+    # cached for the reason banded_hamming_pairs gives
+    h = _signatures(frame_hashes, id_col, "dhash_hi", "dhash_lo", "frame_idx").cache()
+    pairs = _bucket_pairs(
+        h.select("*", _bands64("hi", "lo")), ["frame_idx", "band_idx", "band_val"],
+        ["hi", "lo"], max_bucket_size,
     )
-    bands = h.select(
-        "doc_id",
-        "frame_idx",
-        "dhash_hi",
-        "dhash_lo",
-        F.posexplode(
-            F.array(
-                F.col("dhash_lo") % 65536,
-                (F.col("dhash_lo") / 65536).cast("long"),
-                F.col("dhash_hi") % 65536,
-                (F.col("dhash_hi") / 65536).cast("long"),
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    hot = (
-        bands.groupBy("frame_idx", "band_idx", "band_val")
-        .agg(
-            F.count(F.lit(1)).alias("__bsz"),
-            F.min("doc_id").alias("__hub"),
-            F.min_by("dhash_hi", "doc_id").alias("__hub_hi"),
-            F.min_by("dhash_lo", "doc_id").alias("__hub_lo"),
-        )
-        .filter(F.col("__bsz") > F.lit(max_bucket_size))
-    )
-    cool = bands.join(
-        F.broadcast(hot.select("frame_idx", "band_idx", "band_val")),
-        ["frame_idx", "band_idx", "band_val"],
-        "left_anti",
-    )
-    pairs_hot = (
-        bands.join(F.broadcast(hot), ["frame_idx", "band_idx", "band_val"])
-        .filter(F.col("doc_id") != F.col("__hub"))
-        .select(
-            F.col("__hub").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.col("frame_idx").alias("frame_idx"),
-            F.col("__hub_hi").alias("hi_a"),
-            F.col("__hub_lo").alias("lo_a"),
-            F.col("dhash_hi").alias("hi_b"),
-            F.col("dhash_lo").alias("lo_b"),
-        )
-    )
-    left = cool.alias("x")
-    right = cool.alias("y")
-    cand = (
-        left.join(
-            right,
-            on=[
-                F.col("x.frame_idx") == F.col("y.frame_idx"),
-                F.col("x.band_idx") == F.col("y.band_idx"),
-                F.col("x.band_val") == F.col("y.band_val"),
-                F.col("x.doc_id") < F.col("y.doc_id"),
-            ],
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.frame_idx").alias("frame_idx"),
-            F.col("x.dhash_hi").alias("hi_a"),
-            F.col("x.dhash_lo").alias("lo_a"),
-            F.col("y.dhash_hi").alias("hi_b"),
-            F.col("y.dhash_lo").alias("lo_b"),
-        )
-        .unionByName(pairs_hot)
-    )
-    # Hamming filter BEFORE the (pair, frame) dedup — the distance is
-    # functionally determined by (doc_a, doc_b, frame_idx), so the reorder
-    # is exact and prunes far candidates ahead of both shuffles
-    hamming = F.bit_count(F.expr("hi_a ^ hi_b")) + F.bit_count(F.expr("lo_a ^ lo_b"))
     return (
-        cand.where(hamming.cast("int") <= max_hamming)
+        pairs.where(_hamming() <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b", "frame_idx"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("bigint").alias("n_close_frames"))
@@ -641,50 +572,23 @@ def video_neardup_join(
     """INCREMENTAL video dedup: match a NEW batch of per-frame dHashes
     against the EXISTING corpus — ``video_neardup_pairs``'s frame-aligned
     banding in the asymmetric ingest-door shape of
-    ``banded_hamming_join``. Returns (new_id, corpus_id, n_close_frames)
-    for pairs with >= ``min_close_frames`` frames within
-    ``max_hamming``.
+    ``banded_hamming_join`` (``_band_probe``: the new batch broadcasts, the
+    corpus is probed without a shuffle). Returns (new_id, corpus_id,
+    n_close_frames) for pairs with >= ``min_close_frames`` frames within
+    ``max_hamming``."""
 
-    Scale shape: the new batch's exploded (frame, band) rows BROADCAST;
-    the corpus pays one scan with a map-side probe and no shuffle —
-    runnable per micro-batch."""
-
-    def explode(df: DataFrame, prefix: str) -> DataFrame:
-        h = df.where(F.col("dhash_hi").isNotNull()).select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            "frame_idx",
-            F.col("dhash_hi").alias(f"{prefix}_hi"),
-            F.col("dhash_lo").alias(f"{prefix}_lo"),
-        )
-        return h.select(
-            f"{prefix}_id",
-            "frame_idx",
-            f"{prefix}_hi",
-            f"{prefix}_lo",
-            F.posexplode(
-                F.array(
-                    F.col(f"{prefix}_lo") % 65536,
-                    (F.col(f"{prefix}_lo") / 65536).cast("long"),
-                    F.col(f"{prefix}_hi") % 65536,
-                    (F.col(f"{prefix}_hi") / 65536).cast("long"),
-                )
-            ).alias("band_idx", "band_val"),
+    def bands(df: DataFrame) -> DataFrame:
+        return _signatures(df, id_col, "dhash_hi", "dhash_lo", "frame_idx").select(
+            "*", _bands64("hi", "lo")
         )
 
-    cand = (
-        explode(corpus_frame_hashes, "corpus")
-        .join(
-            F.broadcast(explode(new_frame_hashes, "new")),
-            ["frame_idx", "band_idx", "band_val"],
-        )
-        .select("new_id", "corpus_id", "frame_idx", "new_hi", "new_lo",
-                "corpus_hi", "corpus_lo")
-    )
-    hamming = F.bit_count(F.expr("new_hi ^ corpus_hi")) + F.bit_count(
-        F.expr("new_lo ^ corpus_lo")
+    cand = _band_probe(
+        bands(new_frame_hashes), bands(corpus_frame_hashes),
+        ["frame_idx", "band_idx", "band_val"],
     )
     return (
-        cand.where(hamming.cast("int") <= max_hamming)
+        cand.where(_hamming() <= max_hamming)
+        .select(F.col("doc_a").alias("new_id"), F.col("doc_b").alias("corpus_id"), "frame_idx")
         .dropDuplicates(["new_id", "corpus_id", "frame_idx"])
         .groupBy("new_id", "corpus_id")
         .agg(F.count("*").cast("bigint").alias("n_close_frames"))
@@ -703,52 +607,21 @@ def banded_hamming_join(
     """INCREMENTAL perceptual dedup: match a NEW batch of signatures
     against an EXISTING corpus (the ingest-time shape — a re-crawl's
     images checked at the door, the image analogue of
-    ``simhash_incremental_pairs``). Returns (new_id, corpus_id, hamming),
-    every surfaced pair exact, recall per the usual 4×16-bit banding
-    contract.
+    ``simhash_incremental_pairs``) through ``_band_probe``. Returns
+    (new_id, corpus_id, hamming), every surfaced pair exact, recall per the
+    usual 4×16-bit banding contract. The Hamming filter runs before the
+    pair dedup, so a new id with several signatures keeps every corpus
+    match any of them makes. (For a big backfill where the 'new' side is
+    itself corpus-sized, union both sides into ``banded_hamming_pairs``
+    instead.)"""
 
-    Scale shape: the new batch is a micro-batch — orders of magnitude
-    smaller than the corpus — so its exploded band rows BROADCAST and the
-    corpus pays ONE scan with a map-side hash-join probe: no shuffle of
-    the corpus at all, which is what makes this runnable per ingest batch
-    rather than per dedup campaign. (For a big backfill where the 'new'
-    side is itself corpus-sized, union both sides into
-    ``banded_hamming_pairs`` instead.)"""
+    def bands(df: DataFrame) -> DataFrame:
+        return _signatures(df, id_col, hi_col, lo_col).select("*", _bands64("hi", "lo"))
 
-    def explode_bands(df: DataFrame, prefix: str) -> DataFrame:
-        h = df.where(F.col(hi_col).isNotNull()).select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(hi_col).alias(f"{prefix}_hi"),
-            F.col(lo_col).alias(f"{prefix}_lo"),
-        )
-        return h.select(
-            f"{prefix}_id",
-            f"{prefix}_hi",
-            f"{prefix}_lo",
-            F.posexplode(
-                F.array(
-                    F.col(f"{prefix}_lo") % 65536,
-                    (F.col(f"{prefix}_lo") / 65536).cast("long"),
-                    F.col(f"{prefix}_hi") % 65536,
-                    (F.col(f"{prefix}_hi") / 65536).cast("long"),
-                )
-            ).alias("band_idx", "band_val"),
-        )
-
-    new_bands = explode_bands(new_hashes, "new")
-    corpus_bands = explode_bands(corpus_hashes, "corpus")
-    cand = (
-        corpus_bands.join(
-            F.broadcast(new_bands), ["band_idx", "band_val"]
-        )
-        .select("new_id", "corpus_id", "new_hi", "new_lo", "corpus_hi", "corpus_lo")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    hamming = F.bit_count(F.expr("new_hi ^ corpus_hi")) + F.bit_count(
-        F.expr("new_lo ^ corpus_lo")
-    )
+    cand = _band_probe(bands(new_hashes), bands(corpus_hashes), ["band_idx", "band_val"])
     return (
-        cand.withColumn("hamming", hamming.cast("int"))
+        cand.withColumn("hamming", _hamming())
         .where(F.col("hamming") <= max_hamming)
-        .select("new_id", "corpus_id", "hamming")
+        .select(F.col("doc_a").alias("new_id"), F.col("doc_b").alias("corpus_id"), "hamming")
+        .dropDuplicates(["new_id", "corpus_id"])
     )

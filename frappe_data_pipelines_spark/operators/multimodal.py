@@ -486,7 +486,9 @@ def audio_fingerprint(
     sparse sample corruption — re-encodes land within a few Hamming bits.
     Decode failures and too-short clips land in ``fp_error`` (totality);
     near-dup pairing reuses the modality-agnostic
-    ``imagehash.banded_hamming_pairs`` join."""
+    ``imagehash.banded_hamming_pairs`` (batch) and
+    ``imagehash.banded_hamming_join`` (incremental) joins, which pair
+    through the bucket-pair join every near-dup modality shares."""
     narrow = df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(bin_col).alias("content")
     )

@@ -46,6 +46,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -186,6 +187,12 @@ class DenseIndex:
 
     def release(self) -> None:
         self.frame.unpersist()
+
+    def live(self) -> bool:
+        """Whether the cache still stands: Spark keeps one entry per plan,
+        so a service over equal vectors that releases its index drops it
+        here too."""
+        return self.frame.storageLevel != StorageLevel.NONE
 
     def knn(self, query_vec: list[float], k: int, id_col: str, filters: dict | None = None) -> DataFrame:
         """``filtered_knn(vectors, query_vec, filters, k)``'s rows."""
@@ -428,6 +435,10 @@ class BM25Stats:
 
     def release(self) -> None:
         self.docs.unpersist()
+
+    def live(self) -> bool:
+        """Whether the cached ``docs`` still stand (see ``DenseIndex.live``)."""
+        return self.docs.storageLevel != StorageLevel.NONE
 
     def top(self, query_terms: list[str], n: int, k1: float = BM25_K1, b: float = BM25_B) -> list:
         """``bm25_scores(corpus, query_terms)``'s top ``n`` ``(doc_id, bm25)``

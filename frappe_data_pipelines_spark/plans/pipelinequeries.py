@@ -1594,13 +1594,13 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recall rule (pair surfaced iff it agrees on ≥1 band) and the
     exactness rule (every surfaced pair's distance is true) are pinned."""
     from frappe_data_pipelines_spark.operators.imagehash import (
-        dhash_neardup_pairs,
+        banded_hamming_pairs,
         pattern_image_dhash,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     hashes = pattern_image_dhash(docs)
-    return dhash_neardup_pairs(hashes, max_hamming=6)
+    return banded_hamming_pairs(hashes, max_hamming=6)
 
 
 @register(
@@ -1653,13 +1653,13 @@ def image_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure in SQL."""
     from frappe_data_pipelines_spark.operators.dedup import connected_components_star
     from frappe_data_pipelines_spark.operators.imagehash import (
-        dhash_neardup_pairs,
+        banded_hamming_pairs,
         pattern_image_dhash,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     hashes = pattern_image_dhash(docs)
-    pairs = dhash_neardup_pairs(hashes, max_hamming=6).select(
+    pairs = banded_hamming_pairs(hashes, max_hamming=6).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
     return connected_components_star(pairs)

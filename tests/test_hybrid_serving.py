@@ -387,6 +387,25 @@ def test_dense_index_follows_the_vectors(spark, tmp_path):
     assert stats.docs.storageLevel == StorageLevel.NONE
 
 
+def test_dense_index_survives_another_services_release(spark, sf_dir):
+    """Two services over equal vectors plans share one Spark cache entry.
+    When one releases it, the other rebuilds its index on the next request
+    instead of silently reading the vectors file."""
+    a = api.SearchService(vectors=load_table(spark, sf_dir, "embeddings"))
+    b = api.SearchService(vectors=load_table(spark, sf_dir, "embeddings"))
+    try:
+        for svc in (a, b):
+            svc.search("fast join table scan").collect()
+        a.release_caches()
+        for _ in range(2):
+            warm = b.search("fast join table scan")
+            warm.collect()
+            assert "InMemoryTableScan" in warm._jdf.queryExecution().executedPlan().toString()
+    finally:
+        a.release_caches()
+        b.release_caches()
+
+
 def test_first_dense_request_materialises_the_index(spark, tracer, tmp_path):
     """The index adds no job: a cold search runs the one job an uncached
     top-k runs, and the next request reads the cached rows."""

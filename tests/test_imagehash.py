@@ -108,11 +108,11 @@ def test_spark_image_dhash_and_banded_pairs(spark):
     for doc_id in (0, 7, 63, 159):
         assert (rows[doc_id].dhash_hi, rows[doc_id].dhash_lo) == _closed_form(doc_id)
 
-    from frappe_data_pipelines_spark.operators.imagehash import dhash_neardup_pairs
+    from frappe_data_pipelines_spark.operators.imagehash import banded_hamming_pairs
 
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dhash_neardup_pairs(hashes, max_hamming=6).collect()
+        for r in banded_hamming_pairs(hashes, max_hamming=6).collect()
     }
     # brute-force reference: every surfaced pair must be exact, and every
     # pair ≤6 that agrees on ≥1 band must be surfaced (the banding contract)
@@ -153,9 +153,9 @@ def test_decode_failure_totality(spark):
     assert out[5].hash_error.startswith("error: ") and out[5].dhash_hi is None
     assert out[6].hash_error.startswith("error: ") and out[6].dhash_hi is None
     # and the banded join silently skips failed rows
-    from frappe_data_pipelines_spark.operators.imagehash import dhash_neardup_pairs
+    from frappe_data_pipelines_spark.operators.imagehash import banded_hamming_pairs
 
-    assert dhash_neardup_pairs(image_dhash(df)).count() == 0
+    assert banded_hamming_pairs(image_dhash(df)).count() == 0
 
 
 def test_streaming_perceptual_dedup(spark, tmp_path):
@@ -491,6 +491,76 @@ def test_incremental_join_finds_originals(spark):
     assert got == expected
     # every re-rendered image rediscovers its own original
     assert all((d, d) in got for d in new_h), "a re-crawl missed its original"
+
+
+@pytest.mark.parametrize("order", [1, -1])
+def test_incremental_join_keeps_a_repeated_ids_exact_match(spark, order):
+    """A new id carrying two signatures keeps the match either one makes,
+    whatever their row order: the Hamming filter runs before the pair
+    dedup, so the distance-16 candidate cannot shadow the exact one."""
+    from frappe_data_pipelines_spark.operators.imagehash import banded_hamming_join
+
+    schema = "doc_id long, dhash_hi long, dhash_lo long"
+    new = spark.createDataFrame([(1, 0, 0), (1, 0, 0xFFFF0000)][::order], schema)
+    corpus = spark.createDataFrame([(9, 0, 0)], schema)
+    got = banded_hamming_join(new, corpus, max_hamming=6).collect()
+    assert [tuple(r) for r in got] == [(1, 9, 0)]
+
+
+def _band_family(spark, n: int):
+    """(doc_id, dhash_hi, dhash_lo) for ``n`` signatures that share band 0
+    (lo % 65536 == 7) and carry ``doc_id`` in the other three, so one
+    bucket holds the corpus and two docs lie 3·popcount(a ^ b) apart."""
+    rows = [(d, d * 65537, 7 + (d << 16)) for d in range(n)]
+    return spark.createDataFrame(rows, "doc_id long, dhash_hi long, dhash_lo long")
+
+
+@pytest.mark.parametrize("cap", [8, 1024])
+def test_video_pairs_on_single_frames_equal_banded_pairs(spark, cap):
+    """On one-frame videos the frame-aligned join is the image join: the
+    same pairs at min_close_frames=1, with a hot bucket (cap 8) and
+    without (the default cap)."""
+    import pyspark.sql.functions as F
+
+    from frappe_data_pipelines_spark.operators.imagehash import (
+        banded_hamming_pairs,
+        video_neardup_pairs,
+    )
+
+    hashes = _band_family(spark, 30)
+    image = {(r.doc_a, r.doc_b) for r in banded_hamming_pairs(
+        hashes, max_hamming=4, max_bucket_size=cap).collect()}
+    frames = hashes.withColumn("frame_idx", F.lit(0))
+    video = {(r.doc_a, r.doc_b) for r in video_neardup_pairs(
+        frames, max_hamming=4, min_close_frames=1, max_bucket_size=cap).collect()}
+    assert video == image and image
+    if cap == 8:  # the hot bucket links to its hub only
+        assert {a for a, _ in image} == {0}
+
+
+def test_video_join_on_single_frames_equals_banded_join(spark):
+    """On one-frame videos the incremental video join is the image join."""
+    import pyspark.sql.functions as F
+
+    from frappe_data_pipelines_spark.operators.imagehash import (
+        banded_hamming_join,
+        video_neardup_join,
+    )
+
+    corpus = _band_family(spark, 30)
+    new = spark.createDataFrame(
+        [(100, 3, 7), (101, 6, 7 + (2 << 16)), (101, 0xFFFF, 0), (102, 1 << 40, 1 << 20)],
+        "doc_id long, dhash_hi long, dhash_lo long",
+    )
+    image = {(r.new_id, r.corpus_id) for r in banded_hamming_join(
+        new, corpus, max_hamming=4).collect()}
+
+    def frame0(df):
+        return df.withColumn("frame_idx", F.lit(0))
+
+    video = {(r.new_id, r.corpus_id) for r in video_neardup_join(
+        frame0(new), frame0(corpus), max_hamming=4, min_close_frames=1).collect()}
+    assert video == image and image
 
 
 def test_fused_pattern_kernels_equal_composition(spark):
